@@ -32,17 +32,26 @@ At scale: the filter table is keyset-bounded and broadcastable far beyond
 `autoBroadcastJoinThreshold` limits on the raw dim (positions are short
 strings, not rows); the probe is k broadcast-hash lookups per fact row,
 map-side, before any exchange.
+
+The ingest doors keep the filter as a transactional position-set table
+beside their key state (:func:`bloom_state_or_backfill`,
+:func:`merge_bloom_positions`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..storage import TxnTable
 
 BLOOM_K = 3     # hash rows
 BLOOM_HEX = 4   # default hex digits per position → 65 536 slots per row
 
-__all__ = ["BLOOM_K", "BLOOM_HEX", "bloom_build", "bloom_probe", "bloom_mark"]
+__all__ = [
+    "BLOOM_K", "BLOOM_HEX", "bloom_build", "bloom_probe", "bloom_mark",
+    "bloom_state_or_backfill", "merge_bloom_positions",
+]
 
 
 def _pos(
@@ -146,4 +155,59 @@ def bloom_mark(
         hits = hits + F.col(f"__hit{j}")
     return out.withColumn(out_col, hits).drop(
         *[f"__hit{j}" for j in range(BLOOM_K)]
+    )
+
+
+def bloom_state_or_backfill(
+    spark: SparkSession,
+    bloom_table: TxnTable | None,
+    position_src: DataFrame,
+    existing_keys: DataFrame,
+) -> tuple[DataFrame | None, DataFrame]:
+    """``(state, position_src)`` for one batch screened against non-empty
+    key state: ``state`` is the committed (j, pos) set, or None when the
+    door keeps no filter or the filter is still empty.
+
+    An empty filter beside existing keys means it was enabled after those
+    keys landed; screening would pass their dups as "guaranteed new", so
+    the caller takes the unscreened path and ``position_src`` gains
+    ``existing_keys`` — this batch backfills the filter (one key-column
+    scan, paid once). Replay-deterministic: a replayed batch sees
+    keys_before ∪ batch, whose position set equals the original one."""
+    if bloom_table is None:
+        return None, position_src
+    snap = bloom_table.snapshot()
+    if snap.version >= 0 and snap.files:
+        return bloom_table.read(spark).select("j", "pos"), position_src
+    return None, position_src.unionByName(existing_keys)
+
+
+def merge_bloom_positions(
+    spark: SparkSession,
+    bloom_table: TxnTable | None,
+    position_src: DataFrame,
+    key_col: str,
+    app_id: str,
+    batch_id: int,
+) -> None:
+    """Fold the batch's own keys (plus any backfill) into the filter table;
+    a no-op when the door keeps no filter.
+
+    The position set is a pure function of the ingested stream: a dup's
+    positions are already present (the (j, pos) merge key makes the add
+    idempotent) and a replayed batch regenerates identical positions. The
+    batch's (app_id, batch_id) marker on the filter's own log makes it
+    exactly-once: a crash after the door's state commit replays the batch,
+    no-ops that commit and completes this one, so the filter is complete
+    before the next batch screens against it — which keeps the screen's
+    "guaranteed new" claim true."""
+    if bloom_table is None:
+        return
+    bloom_table.merge_upsert(
+        spark,
+        bloom_build(position_src, key_col),
+        keys=["j", "pos"],
+        partition_col="j",
+        app_id=app_id,
+        batch_id=batch_id,
     )

@@ -36,6 +36,7 @@ from pyspark.sql import SparkSession
 
 from .plans.gold import GOLD_BUILDERS
 from .schemas import BRONZE_SCHEMAS
+from .session import get_spark
 from .sources.synthetic import GENERATORS
 from .sources.writers import ingest_to_bronze, write_staging_csv
 from .streaming.ingest import run_incremental_ingest
@@ -124,16 +125,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--work-dir", required=True, help="lake root directory")
     p.add_argument("--gen-ticks", type=int, default=1, help="generator ticks to run first")
     p.add_argument("--seed", type=int, default=0, help="base seed for the generators")
-    p.add_argument("--master", default="local[*]", help="Spark master (default local[*])")
+    p.add_argument(
+        "--master", default=None,
+        help="Spark master (default local[$SPARK_GRAFT_CPUS], else local[*])",
+    )
     args = p.parse_args(argv)
 
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("data_lake_medallion_architecture_project_spark-pipeline")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(master=args.master)
     try:
         stats = run_pipeline(spark, args.work_dir, gen_ticks=args.gen_ticks, seed=args.seed)
         print("silver rows written:", stats["silver_rows"])

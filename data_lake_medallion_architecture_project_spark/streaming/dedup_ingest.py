@@ -38,7 +38,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.bloom import (
+    BLOOM_K,
+    bloom_mark,
+    bloom_state_or_backfill,
+    merge_bloom_positions,
+)
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 _HASH_COL = "content_hash"
 _PART_COL = "hash_shard"
@@ -85,25 +92,10 @@ def dedup_batch_against_table(
     snap = table.snapshot()
     if snap.version >= 0 and snap.files:
         seen = table.read(spark).select(_HASH_COL)
-        bloom_state = None
-        if bloom_table is not None:
-            bsnap = bloom_table.snapshot()
-            if bsnap.version >= 0 and bsnap.files:
-                bloom_state = bloom_table.read(spark).select("j", "pos")
-            else:
-                # Bootstrap: bloom enabled on an EXISTING corpus whose
-                # hashes predate the filter. Screening now would pass
-                # pre-filter dups as "guaranteed new" and the keyed merge
-                # would REPLACE their first-written rows — so this batch
-                # backfills the filter from the corpus hash column (one
-                # column-pruned scan, paid once) and takes the plain
-                # anti-join path. Replay-deterministic: a replayed batch
-                # sees corpus_before ∪ batch, whose position set equals the
-                # original corpus_before ∪ batch positions.
-                position_src = position_src.unionByName(seen)
+        bloom_state, position_src = bloom_state_or_backfill(
+            spark, bloom_table, position_src, seen
+        )
         if bloom_state is not None:
-            from ..operators.bloom import BLOOM_K, bloom_mark
-
             marked = bloom_mark(collapsed, _HASH_COL, bloom_state, "_hits")
             clean = marked.filter(F.col("_hits") < BLOOM_K).drop("_hits")
             cands = marked.filter(F.col("_hits") == BLOOM_K).drop("_hits")
@@ -124,28 +116,7 @@ def dedup_batch_against_table(
         app_id=app_id,
         batch_id=batch_id,
     )
-    if bloom_table is not None:
-        from ..operators.bloom import bloom_build
-
-        # Maintain the filter from the batch's OWN hash set (pre anti-join;
-        # plus the corpus backfill on the bootstrap batch above): a dup's
-        # positions are already present (the merge key makes the add
-        # idempotent), and a replayed batch regenerates identical positions
-        # whatever the corpus now holds — so the position set is a pure
-        # deterministic function of the ingested stream. Exactly-once via
-        # the same (app_id, batch_id) marker on the bloom table's own log;
-        # a crash between the corpus commit and this one replays the batch,
-        # no-ops the corpus merge, and completes this merge — the filter is
-        # therefore always complete before the next batch screens against
-        # it, which is what keeps the screen's "guaranteed new" claim true.
-        bloom_table.merge_upsert(
-            spark,
-            bloom_build(position_src, _HASH_COL),
-            keys=["j", "pos"],
-            partition_col="j",
-            app_id=app_id,
-            batch_id=batch_id,
-        )
+    merge_bloom_positions(spark, bloom_table, position_src, _HASH_COL, app_id, batch_id)
 
 
 def run_dedup_ingest(
@@ -166,26 +137,15 @@ def run_dedup_ingest(
     the 100 TB intake shape: the filter broadcast is bounded at k·16⁴
     rows, Bloom-rejected documents never touch the corpus table at all,
     and the anti-join's batch side shrinks to true dups + the fp sliver."""
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     bloom_table = TxnTable(bloom_table_path) if bloom_table_path else None
     app_id = f"dedup_ingest/{os.path.basename(table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         dedup_batch_against_table(
-            spark, table, batch_df, id_col, text_col, app_id, int(batch_id),
+            spark, table, batch_df, id_col, text_col, app_id, batch_id,
             bloom_table=bloom_table,
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_root, "dedup_ingest"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "dedup_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

@@ -47,7 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from ..operators.bloom import (
+    BLOOM_K,
+    bloom_mark,
+    bloom_state_or_backfill,
+    merge_bloom_positions,
+)
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 _GRAM_SHARD = "gram_shard"
 _DOC_SHARD = "id_shard"
@@ -122,20 +129,10 @@ def excise_batch_against_table(
     if snap.version >= 0 and snap.files:
         seen = gram_table.read(spark).select("gh")
         probe = canon_occ
-        bloom_state = None
-        if bloom_table is not None:
-            bsnap = bloom_table.snapshot()
-            if bsnap.version >= 0 and bsnap.files:
-                bloom_state = bloom_table.read(spark).select("j", "pos")
-            else:
-                # Bootstrap: bloom enabled on EXISTING gram state whose
-                # hashes predate the filter — backfill positions from the
-                # state this batch (one hash-column scan, paid once) and
-                # take the plain semi-join path (the dedup_ingest rule).
-                position_src = position_src.unionByName(seen)
+        bloom_state, position_src = bloom_state_or_backfill(
+            spark, bloom_table, position_src, seen
+        )
         if bloom_state is not None:
-            from ..operators.bloom import BLOOM_K, bloom_mark
-
             marked_b = bloom_mark(canon_occ, "gh", bloom_state, "_hits")
             # hits < K ⇒ guaranteed-new gram ⇒ cannot be in state.
             probe = marked_b.filter(F.col("_hits") == BLOOM_K).drop("_hits")
@@ -214,21 +211,7 @@ def excise_batch_against_table(
         app_id=app_id,
         batch_id=batch_id,
     )
-    if bloom_table is not None:
-        from ..operators.bloom import bloom_build
-
-        # Maintain the filter from the batch's own gram set (plus the
-        # state backfill on the bootstrap batch): deterministic function
-        # of the ingested stream, idempotent under replay via the marker —
-        # the dedup_ingest bloom discipline at gram grain.
-        bloom_table.merge_upsert(
-            spark,
-            bloom_build(position_src, "gh"),
-            keys=["j", "pos"],
-            partition_col="j",
-            app_id=app_id,
-            batch_id=batch_id,
-        )
+    merge_bloom_positions(spark, bloom_table, position_src, "gh", app_id, batch_id)
 
 
 def run_excise_ingest(
@@ -247,30 +230,17 @@ def run_excise_ingest(
     ``bloom_table_path``, a gram-grain Bloom position-set table screens
     each batch map-side before the gram-state semi-join (the 100 TB
     shape — see the module docstring)."""
-    schema = spark.read.parquet(source_dir).schema
     corpus_table = TxnTable(corpus_table_path)
     gram_table = TxnTable(gram_table_path)
     bloom_table = TxnTable(bloom_table_path) if bloom_table_path else None
     app_id = f"excise_ingest/{os.path.basename(corpus_table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         excise_batch_against_table(
             spark, corpus_table, gram_table, batch_df,
-            id_col, text_col, n, app_id, int(batch_id),
+            id_col, text_col, n, app_id, batch_id,
             bloom_table=bloom_table,
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "excise_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "excise_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

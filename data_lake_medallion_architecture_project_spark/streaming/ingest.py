@@ -17,9 +17,8 @@ file source + checkpoint:
 * each micro-batch runs the same domain cleaner used by batch mode —
   one code path for validation semantics.
 
-At scale this is the Auto-Loader pattern: file listing is incremental,
-per-batch volume is bounded by ``maxFilesPerTrigger``, and the Silver write
-stays append-only and partition-pruned.
+At scale this is the Auto-Loader pattern: file listing is incremental and
+the Silver write stays append-only and partition-pruned.
 """
 
 from __future__ import annotations
@@ -32,6 +31,7 @@ from pyspark.sql import SparkSession
 from ..plans.silver import CLEANERS
 from ..schemas import BRONZE_SCHEMAS
 from ..sources.writers import write_silver_batch
+from .runner import run_door
 
 
 def run_incremental_ingest(
@@ -41,20 +41,17 @@ def run_incremental_ingest(
     checkpoint_root: str,
     domain: str,
     processed_at: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> int:
     """Process all not-yet-seen Bronze CSVs for a domain into Silver.
 
     Returns the number of rows written this invocation. Re-running with the
     same checkpoint and no new files is a no-op (idempotence contract,
-    bronze_to_silver.py:198-200).
+    bronze_to_silver.py:198-200). ``processed_at`` stamps both the rows and
+    the Silver ``year=/month=/day=`` partitions (default: now, UTC).
     """
     processed_at = processed_at or datetime.now(timezone.utc).isoformat()
     cleaner = CLEANERS[domain]
-    src = os.path.join(bronze_root, domain)
-    checkpoint = os.path.join(checkpoint_root, domain)
-
-    reader = (
+    stream = (
         spark.readStream.schema(BRONZE_SCHEMAS[domain])
         .option("header", True)
         .option("mode", "PERMISSIVE")
@@ -62,27 +59,20 @@ def run_incremental_ingest(
         # lookup reads the leaves without partition-column inference, keeping
         # the stream schema identical to the flat-directory case.
         .option("recursiveFileLookup", "true")
+        .csv(os.path.join(bronze_root, domain))
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.csv(src)
-
-    written = {"rows": 0}
+    ingest_time = datetime.fromisoformat(processed_at)
+    written = 0
 
     def _sink(batch_df, batch_id: int) -> None:
+        nonlocal written
         cleaned = cleaner(batch_df, processed_at)
         n = cleaned.count()
         if n:
             # Idempotent: overwrite of the batchId-keyed subtree, so replay
             # after a crash-before-checkpoint converges instead of duplicating.
-            write_silver_batch(cleaned, silver_root, domain, batch_id)
-            written["rows"] += n
+            write_silver_batch(cleaned, silver_root, domain, batch_id, ingest_time)
+            written += n
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return written["rows"]
+    run_door(stream, os.path.join(checkpoint_root, domain), _sink)
+    return written

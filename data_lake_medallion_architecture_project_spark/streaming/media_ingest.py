@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 MEDIA_HASH_SCHEMA = "doc_id long, dhash long, decode_error string"
 
@@ -244,29 +245,16 @@ def run_media_ingest(
     """Consume all not-yet-seen image-payload files (parquet of doc_id,
     payload) into the perceptually-deduped media table. Returns the
     number of micro-batches applied this invocation."""
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     index_table = TxnTable(index_path)
     quarantine_table = TxnTable(quarantine_path)
     app_id = f"media_ingest/{os.path.basename(table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         media_batch_against_table(
             spark, table, index_table, quarantine_table, batch_df,
-            app_id, int(batch_id), max_hamming=max_hamming,
+            app_id, batch_id, max_hamming=max_hamming,
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "media_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "media_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.logreg import pinned_quality_logit
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 _PART_COL = "id_shard"
 
@@ -119,11 +120,9 @@ def run_quality_ingest(
 ) -> int:
     """Consume all not-yet-seen document files through the quality gate.
     Returns the number of micro-batches applied this invocation."""
-    schema = spark.read.parquet(source_dir).schema
     pass_table = TxnTable(pass_table_path)
     quarantine_table = TxnTable(quarantine_table_path)
     app_id = f"quality_ingest/{os.path.basename(pass_table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         quality_batch_against_tables(
@@ -135,19 +134,8 @@ def run_quality_ingest(
             text_col,
             threshold,
             app_id,
-            int(batch_id),
+            batch_id,
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "quality_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "quality_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from ..plans.gold import GOLD_BUILDERS
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 
 def _domain_tables(domain: str):
@@ -133,9 +134,6 @@ def run_incremental_gold_refresh(
     """
     generated_at = generated_at or datetime.now(timezone.utc).isoformat()
     silver_dir = os.path.join(silver_root, domain)
-    checkpoint = os.path.join(checkpoint_root, f"gold_{domain}")
-    schema = spark.read.parquet(silver_dir).schema
-
     refreshed: set = set()
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -152,13 +150,6 @@ def run_incremental_gold_refresh(
         )
         refreshed.update(days)
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(silver_dir)
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    checkpoint = os.path.join(checkpoint_root, f"gold_{domain}")
+    run_door(parquet_stream(spark, silver_dir), checkpoint, _fold)
     return sorted(refreshed)

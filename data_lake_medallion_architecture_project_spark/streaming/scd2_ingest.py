@@ -11,9 +11,8 @@ story layered twice:
   no-op guarantee a REPLAYED batch writes nothing — even in the crash
   window where the table committed but the checkpoint didn't.
 
-``Trigger.AvailableNow`` makes each invocation a catch-up run that drains
-pending files and exits — the reference's scheduled-DAG cadence without a
-scheduler (the same shape as ``streaming/ingest.py``).
+Each invocation is a ``run_door`` catch-up run (``streaming/runner.py``):
+it drains pending files and exits.
 """
 
 from __future__ import annotations
@@ -23,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..storage.txnlog import TxnTable
+from .runner import parquet_stream, run_door
 
 
 def run_streaming_scd2(
@@ -40,13 +40,13 @@ def run_streaming_scd2(
     # import here would close an import cycle through the package __init__.
     from ..storage.scd2 import scd2_apply
 
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     app_id = f"scd2/{os.path.basename(table_path.rstrip('/'))}"
-    written = {"n": 0}
+    written = 0
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        written["n"] += scd2_apply(
+        nonlocal written
+        written += scd2_apply(
             table,
             spark,
             batch_df,
@@ -57,13 +57,6 @@ def run_streaming_scd2(
             batch_id=batch_id,
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_root, "scd2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return written["n"]
+    checkpoint = os.path.join(checkpoint_root, "scd2")
+    run_door(parquet_stream(spark, source_dir), checkpoint, _apply)
+    return written

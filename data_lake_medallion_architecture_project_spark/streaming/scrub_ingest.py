@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..plans.curation import _EMAIL_RE, _IPV4_RE, _PHONE_RE
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 _PART_COL = "id_shard"
 
@@ -130,27 +131,13 @@ def run_scrub_ingest(
 ) -> int:
     """Consume all not-yet-seen document files through the scrub door.
     Returns the number of micro-batches applied this invocation."""
-    schema = spark.read.parquet(source_dir).schema
     corpus_table = TxnTable(corpus_table_path)
     app_id = f"scrub_ingest/{os.path.basename(corpus_table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         scrub_batch_against_table(
-            spark, corpus_table, batch_df, id_col, text_col, app_id,
-            int(batch_id),
+            spark, corpus_table, batch_df, id_col, text_col, app_id, batch_id
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "scrub_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "scrub_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

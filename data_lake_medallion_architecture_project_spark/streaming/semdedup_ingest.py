@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from ..operators.similarity import _assign_udf
 from ..functions.vectors import to_double_array
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 _STATE_SCHEMA = "vid long, centroid long, affinity double, v array<double>"
 
@@ -159,10 +160,8 @@ def run_semdedup_ingest(
     """Consume all not-yet-seen embedding files into the semantically
     deduped keep-state table. Returns the number of micro-batches applied
     this invocation."""
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     app_id = f"semdedup_ingest/{os.path.basename(table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         semdedup_batch_against_table(
@@ -171,22 +170,11 @@ def run_semdedup_ingest(
             batch_df,
             centroids,
             app_id,
-            int(batch_id),
+            batch_id,
             id_col=id_col,
             vec_col=vec_col,
             tau=tau,
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "semdedup_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "semdedup_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

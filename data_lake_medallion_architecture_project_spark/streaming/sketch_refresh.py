@@ -50,6 +50,7 @@ from ..functions.sketches import (
     kmv_theta,
 )
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 __all__ = [
     "fold_hll_state",
@@ -299,8 +300,8 @@ def run_sketch_gold_refresh(
     """Fold all not-yet-seen event files into the sketch state tables.
 
     File-source checkpoint = exactly-once accounting of which files have
-    been folded (same pattern as ``run_incremental_gold_refresh``); the txn
-    markers close the crash window between a fold and its checkpoint commit.
+    been folded (the shared ``runner.run_door`` driver); the txn markers
+    close the crash window between a fold and its checkpoint commit.
     Returns {state_table: day_partitions_touched_in_last_batch}; re-running
     with no new files (or replaying a committed batch) touches nothing and
     reports 0. ``kmv_group_col`` additionally maintains the per-group KMV
@@ -319,7 +320,6 @@ def run_sketch_gold_refresh(
         if kmv_group_col
         else None
     )
-    schema = spark.read.parquet(events_dir).schema
     touched: dict[str, int] = {}
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -338,13 +338,6 @@ def run_sketch_gold_refresh(
                 app_id="sketch-gold/kmv", batch_id=batch_id,
             )
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", os.path.join(checkpoint_root, "sketch_gold"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    checkpoint = os.path.join(checkpoint_root, "sketch_gold")
+    run_door(parquet_stream(spark, events_dir), checkpoint, _fold)
     return touched

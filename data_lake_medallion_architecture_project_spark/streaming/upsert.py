@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import TxnTable
+from .runner import parquet_stream, run_door
 
 
 def latest_per_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -58,25 +59,14 @@ def run_streaming_upsert(
 ) -> int:
     """Fold all not-yet-seen change files into the keyed table. Returns the
     number of micro-batches applied this invocation (0 when nothing new)."""
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     app_id = f"upsert/{os.path.basename(table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         src = latest_per_key(batch_df, keys, order_col)
         table.merge_upsert(
             spark, src, keys, partition_col, app_id=app_id, batch_id=batch_id
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_root, "upsert"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "upsert")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

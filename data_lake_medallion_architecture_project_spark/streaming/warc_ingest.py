@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..sources.warc import parse_warc
 from ..storage import TxnTable
 from .dedup_ingest import dedup_batch_against_table
+from .runner import parquet_stream, run_door
 
 WARC_PARSED_SCHEMA = (
     "blob_id long, record_id string, warc_type string, uri string, "
@@ -156,27 +157,14 @@ def run_warc_ingest(
     """Consume all not-yet-seen WARC-blob files (parquet of blob_id,
     blob) into the deduped document corpus. Returns the number of
     micro-batches applied this invocation."""
-    schema = spark.read.parquet(source_dir).schema
     table = TxnTable(table_path)
     quarantine_table = TxnTable(quarantine_path)
     app_id = f"warc_ingest/{os.path.basename(table_path.rstrip('/'))}"
-    applied = {"n": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         warc_batch_against_table(
-            spark, table, quarantine_table, batch_df, app_id, int(batch_id)
+            spark, table, quarantine_table, batch_df, app_id, batch_id
         )
-        applied["n"] += 1
 
-    query = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_root, "warc_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return applied["n"]
+    checkpoint = os.path.join(checkpoint_root, "warc_ingest")
+    return run_door(parquet_stream(spark, source_dir), checkpoint, _apply)

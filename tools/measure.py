@@ -1,18 +1,18 @@
-"""Round-16 optimization measurement harness (guide §1).
+"""Per-round optimization measurement harness (guide §1).
 
 For every bench-tagged query (or the names given on argv):
-* capture ``explain("formatted")`` to plans/r16/<name>_<tag>.txt
+* capture ``explain("formatted")`` to plans/r<N>/<name>_<tag>.txt
 * time the computation with the noop sink (guide §1.4) — best of k passes,
   fresh plan per pass — isolating compute from the bench's collect()
 * count plan features that matter: Exchange nodes, join strategies,
   Python-boundary nodes (MapInArrow / ArrowEvalPython / BatchEvalPython)
 
 Usage:
-  python tools/measure_r16.py [--tag before|after] [--sf /root/testdata/sf0.1]
-                              [--passes 3] [query ...]
+  python tools/measure.py --round N [--tag before|after] [--sf SF_DIR]
+                          [--passes 3] [query ...]
 
 Prints one line per query:  name  noop_best_s  exchanges  joins  python_nodes
-and a JSON summary to /tmp/measure_r16_<tag>.json.
+and a JSON summary to /tmp/measure_r<N>_<tag>.json.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ JOIN_RE = re.compile(
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--round", type=int, required=True, help="optimization round N")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=3)
@@ -49,12 +50,13 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
+    rnd = f"r{args.round:02d}"
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark("measure_r16")
+    spark = get_spark(f"measure_{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = (
         {n: REGISTRY[n] for n in args.queries}
@@ -107,7 +109,7 @@ def main() -> None:
             f"py={','.join(out[name]['python_nodes']) or '-'}"
         )
 
-    with open(f"/tmp/measure_r16_{args.tag}.json", "w") as fh:
+    with open(f"/tmp/measure_{rnd}_{args.tag}.json", "w") as fh:
         json.dump(out, fh, indent=1)
     print(
         "total noop best-sum: "
