@@ -1,3 +1,3 @@
 from .txnlog import ConcurrentModificationError, TxnTable, clone_shallow
 
-__all__ = ["TxnTable", "clone_shallow"]
+__all__ = ["ConcurrentModificationError", "TxnTable", "clone_shallow"]

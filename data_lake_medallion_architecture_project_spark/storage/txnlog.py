@@ -37,6 +37,8 @@ Spark-first:
 * **Log checkpointing** — ``checkpoint()`` collapses the snapshot into a
   ``NNN.checkpoint.json`` (Delta's checkpoint file); replay cost becomes
   O(commits since checkpoint), the metadata fix for long-lived tables.
+* **One commit path** — every write commits through ``TxnTable._commit``; a
+  lost race re-reads the log and re-validates before it retries.
 
 Scale notes: the log is O(commits + live files) JSON — the same driver-side
 metadata cost Delta pays before checkpointing; data files never move or
@@ -56,7 +58,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +67,10 @@ from pyspark.sql.types import StructType
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "_data"
 _CHECKPOINT_EVERY = 10  # auto-checkpoint cadence, like Delta's default
+# A scanned row's file as the log-relative path a deletion vector records.
+_REL_PATH = (
+    "substring(_metadata.file_path, instr(_metadata.file_path, '/_data/') + 1)"
+)
 
 
 def _file_column_stats(path: str) -> dict:
@@ -145,6 +151,35 @@ class ConcurrentModificationError(RuntimeError):
     """
 
 
+def _state_actions(snap, path=lambda rel: rel) -> dict:
+    """The actions that re-create ``snap``'s files (with their stats), its
+    deletion-vector state and its schema; ``path`` maps each logged path."""
+    commit = {
+        "add": [
+            {"path": path(rel), "partition": pv, "stats": snap.stats.get(rel)}
+            for rel, pv in sorted(snap.files.items())
+        ],
+        "dv_reset": {path(p): parts for p, parts in snap.dvs.items()},
+    }
+    if snap.schema_json:
+        commit["schema_json"] = snap.schema_json
+    return commit
+
+
+def _restart(_fresh) -> None:
+    """``_commit`` guard for a transaction any lost race invalidates."""
+    raise ConcurrentModificationError("lost the commit race; restart")
+
+
+def _reject_unknown_columns(df: DataFrame, known) -> None:
+    unknown = [c for c in df.columns if c not in known]
+    if unknown:
+        raise ValueError(
+            f"source has columns unknown to the table {unknown}; "
+            "add_columns() the table first"
+        )
+
+
 class ConstraintViolationError(ValueError):
     """Incoming rows violate a table CHECK constraint.
 
@@ -175,6 +210,11 @@ class Snapshot:
     # generated column name -> SQL expression (computed at write time)
     generated: dict = field(default_factory=dict)
 
+    @property
+    def schema(self) -> StructType | None:
+        js = self.schema_json
+        return None if js is None else StructType.fromJson(json.loads(js))
+
 
 class TxnTable:
     """A single transactional parquet table rooted at ``path``."""
@@ -186,25 +226,21 @@ class TxnTable:
 
     # ------------------------------------------------------------------ log
 
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            int(parts[0])
-            for f in os.listdir(self.log_dir)
-            if (parts := f.split(".")) and len(parts) == 2
-            and parts[1] == "json" and parts[0].isdigit()
+    def _log_listing(self) -> tuple[list[int], list[int]]:
+        """One listing of ``_txn_log/``: the ascending versions of its commits
+        (``%020d.json``) and of its checkpoints (``%020d.checkpoint.json``)."""
+        names = os.listdir(self.log_dir) if os.path.isdir(self.log_dir) else []
+        parts = [f.partition(".") for f in names]
+        return tuple(
+            sorted(int(v) for v, _, kind in parts if v.isdigit() and kind == want)
+            for want in ("json", "checkpoint.json")
         )
 
+    def _versions(self) -> list[int]:
+        return self._log_listing()[0]
+
     def _checkpoints(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            int(parts[0])
-            for f in os.listdir(self.log_dir)
-            if (parts := f.split(".")) and len(parts) == 3
-            and parts[1:] == ["checkpoint", "json"] and parts[0].isdigit()
-        )
+        return self._log_listing()[1]
 
     def checkpoint(self) -> int:
         """Collapse the current snapshot into a checkpoint file (Delta-style):
@@ -216,21 +252,10 @@ class TxnTable:
         snap = self.snapshot()
         if snap.version < 0:
             raise ValueError("nothing to checkpoint")
-        payload = {
-            "version": snap.version,
-            "files": snap.files,
-            "txns": snap.txns,
-            "schema_json": snap.schema_json,
-            "partition_col": snap.partition_col,
-            "constraints": snap.constraints,
-            "stats": snap.stats,
-            "dvs": snap.dvs,
-            "generated": snap.generated,
-        }
         target = os.path.join(self.log_dir, f"{snap.version:020d}.checkpoint.json")
         tmp = target + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            json.dump(payload, fh)
+            json.dump(asdict(snap), fh)
         os.replace(tmp, target)
         return snap.version
 
@@ -238,24 +263,15 @@ class TxnTable:
         """Replay the log up to (and including) ``version`` (default: head),
         starting from the newest checkpoint at or below the target."""
         snap = Snapshot()
-        base = [
-            c for c in self._checkpoints() if version is None or c <= version
-        ]
+        versions, checkpoints = self._log_listing()
+        base = [c for c in checkpoints if version is None or c <= version]
         if base:
             with open(
                 os.path.join(self.log_dir, f"{base[-1]:020d}.checkpoint.json")
             ) as fh:
-                ck = json.load(fh)
-            snap.version = int(ck["version"])
-            snap.files = dict(ck["files"])
-            snap.txns = dict(ck["txns"])
-            snap.schema_json = ck.get("schema_json")
-            snap.partition_col = ck.get("partition_col")
-            snap.constraints = dict(ck.get("constraints", {}))
-            snap.stats = dict(ck.get("stats", {}))
-            snap.dvs = dict(ck.get("dvs", {}))
-            snap.generated = dict(ck.get("generated", {}))
-        for v in self._versions():
+                # Fields an older checkpoint lacks keep their defaults.
+                snap = Snapshot(**json.load(fh))
+        for v in versions:
             if v <= snap.version:
                 continue
             if version is not None and v > version:
@@ -298,34 +314,54 @@ class TxnTable:
             snap.version = v
         return snap
 
-    @staticmethod
-    def _dv_cover(snap: Snapshot, affected: set) -> frozenset:
-        return frozenset(
-            p
-            for p, parts in snap.dvs.items()
-            if not parts or affected & set(parts)
-        )
-
-    def _check_unchanged(
-        self,
-        fresh: Snapshot,
-        affected: list,
-        read_files: frozenset,
-        op: str,
-        read_dvs: frozenset = frozenset(),
-    ) -> None:
-        """Conflict detection after a lost commit race: raise unless the
-        affected partitions hold exactly the files the transaction read AND
-        no rival landed a deletion vector over them (a rewrite computed
+    def _unchanged_guard(self, snap: Snapshot, affected, op: str):
+        """A ``_commit`` guard for a partition rewrite computed from ``snap``:
+        it raises unless the affected partitions hold exactly the files read
+        AND no rival landed a deletion vector over them (a rewrite computed
         without the rival's DV would resurrect its deleted rows)."""
         aff = set(affected)
-        fresh_files = frozenset(p for p, pv in fresh.files.items() if pv in aff)
-        if fresh_files != read_files or self._dv_cover(fresh, aff) != read_dvs:
-            raise ConcurrentModificationError(
-                f"{op} lost the commit race and a concurrent commit changed "
-                f"partitions {sorted(aff)}; re-run against the new "
-                "table state"
-            )
+
+        def read_set(s: Snapshot) -> tuple:
+            files = {p for p, pv in s.files.items() if pv in aff}
+            return files, {p for p, pts in s.dvs.items() if not pts or aff & set(pts)}
+
+        read = read_set(snap)
+
+        def guard(fresh: Snapshot) -> None:
+            if read_set(fresh) != read:
+                raise ConcurrentModificationError(
+                    f"{op} lost the commit race and a concurrent commit changed "
+                    f"partitions {sorted(aff, key=str)}; re-run against the new "
+                    "table state"
+                )
+
+        return guard
+
+    @staticmethod
+    def _already_committed(snap: Snapshot, app_id, batch_id) -> bool:
+        marked = app_id is not None and batch_id is not None
+        return marked and snap.txns.get(app_id, -1) >= int(batch_id)
+
+    def _commit(
+        self, snap: Snapshot, make_commit, app_id=None, batch_id=None, guard=None
+    ) -> int | None:
+        """The one optimistic-concurrency loop every write commits through.
+        ``make_commit(snap)`` builds the actions from the snapshot the commit
+        lands on. A lost race re-reads the log: ``None`` if the (app_id,
+        batch_id) marker committed meanwhile, else ``guard(fresh)`` (raises to
+        abort) and a retry. Returns the committed version."""
+        marked = app_id is not None and batch_id is not None
+        while True:
+            commit = make_commit(snap)
+            if marked:
+                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
+            if self._try_commit(snap.version + 1, commit):
+                return snap.version + 1
+            snap = self.snapshot()
+            if self._already_committed(snap, app_id, batch_id):
+                return None
+            if guard is not None:
+                guard(snap)
 
     def _validate_constraints(self, df: DataFrame, snap: Snapshot, op: str) -> None:
         """Reject ``df`` if any row evaluates a CHECK constraint to FALSE
@@ -346,12 +382,8 @@ class TxnTable:
         the standard guard for derived partition columns (a fact's date
         partition derived from its timestamp cannot silently disagree).
         Metadata-only commit; returns the commit version."""
-        while True:
-            snap = self.snapshot()
-            if self._try_commit(
-                snap.version + 1, {"set_generated": {"name": name, "expr": expr}}
-            ):
-                return snap.version + 1
+        action = {"set_generated": {"name": name, "expr": expr}}
+        return self._commit(self.snapshot(), lambda _s: action)
 
     def _apply_generated(self, df: DataFrame, snap: Snapshot, op: str) -> DataFrame:
         for name, expr in snap.generated.items():
@@ -376,8 +408,8 @@ class TxnTable:
         would make every future write fail), then a metadata-only commit
         records it; every subsequent write validates incoming rows against
         it. Returns the commit version."""
-        while True:
-            snap = self.snapshot()
+
+        def make_commit(snap: Snapshot) -> dict:
             if name in snap.constraints:
                 raise ValueError(f"constraint {name!r} already exists")
             if snap.files:
@@ -385,19 +417,19 @@ class TxnTable:
                 self._validate_constraints(
                     self.read(spark, version=snap.version), probe, "add_constraint"
                 )
-            if self._try_commit(
-                snap.version + 1, {"set_constraint": {"name": name, "expr": expr}}
-            ):
-                return snap.version + 1
+            return {"set_constraint": {"name": name, "expr": expr}}
+
+        return self._commit(self.snapshot(), make_commit)
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (metadata-only commit)."""
-        while True:
-            snap = self.snapshot()
+
+        def make_commit(snap: Snapshot) -> dict:
             if name not in snap.constraints:
                 raise ValueError(f"no such constraint {name!r}")
-            if self._try_commit(snap.version + 1, {"drop_constraint": name}):
-                return snap.version + 1
+            return {"drop_constraint": name}
+
+        return self._commit(self.snapshot(), make_commit)
 
     def _try_commit(self, version: int, commit: dict) -> bool:
         """Exclusive-create of the version file — the atomicity point. Returns
@@ -434,19 +466,21 @@ class TxnTable:
             .write.partitionBy("__part")
             .parquet(staging)
         )
+        return self._staged_adds(staging)
+
+    def _staged_adds(self, staging: str, partition: str | None = None) -> list[dict]:
+        """The ``add`` actions (path, partition, footer stats) of the parquet
+        files under ``staging``: a ``__part=`` dir names the partition."""
         adds = []
         for root, _dirs, names in os.walk(staging):
-            part = None
             base = os.path.basename(root)
-            if base.startswith("__part="):
-                part = base.split("=", 1)[1]
+            part = base.split("=", 1)[1] if base.startswith("__part=") else partition
             for n in names:
                 if n.endswith(".parquet"):
                     full = os.path.join(root, n)
-                    rel = os.path.relpath(full, self.path)
                     adds.append(
                         {
-                            "path": rel,
+                            "path": os.path.relpath(full, self.path),
                             "partition": part,
                             "stats": _file_column_stats(full),
                         }
@@ -471,9 +505,8 @@ class TxnTable:
         ``vacuum``), never partial table state.
         """
         snap = self.snapshot()
-        if app_id is not None and batch_id is not None:
-            if snap.txns.get(app_id, -1) >= int(batch_id):
-                return []
+        if self._already_committed(snap, app_id, batch_id):
+            return []
 
         df = self._apply_generated(df, snap, "merge_overwrite_partitions")
 
@@ -484,16 +517,7 @@ class TxnTable:
         # schema_json on an existing table, and the missing columns read back
         # as NULL for the overwritten partitions).
         if snap.schema_json is not None:
-            committed = {
-                f.name
-                for f in StructType.fromJson(json.loads(snap.schema_json)).fields
-            }
-            unknown = [c for c in df.columns if c not in committed]
-            if unknown:
-                raise ValueError(
-                    f"source has columns unknown to the table {unknown}; "
-                    "add_columns() the table first"
-                )
+            _reject_unknown_columns(df, snap.schema.fieldNames())
 
         self._validate_constraints(df, snap, "merge_overwrite_partitions")
 
@@ -503,23 +527,19 @@ class TxnTable:
         adds = self._stage_partitioned(df, partition_col)
         new_parts = sorted({a["partition"] for a in adds})
 
-        while True:
+        def make_commit(snap: Snapshot) -> dict:
             commit = {
                 "add": adds,
                 "remove": [p for p, pv in snap.files.items() if pv in new_parts],
                 "partition_col": partition_col,
             }
-            if app_id is not None and batch_id is not None:
-                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
             if snap.version < 0:
                 commit["schema_json"] = df.drop("__part").schema.json()
-            if self._try_commit(snap.version + 1, commit):
-                return new_parts
-            # Lost the commit race: re-read, re-validate idempotency, retry.
-            snap = self.snapshot()
-            if app_id is not None and batch_id is not None:
-                if snap.txns.get(app_id, -1) >= int(batch_id):
-                    return []
+            return commit
+
+        # A blind overwrite reads nothing back: a lost race needs no guard.
+        v = self._commit(snap, make_commit, app_id, batch_id)
+        return [] if v is None else new_parts
 
     def merge_upsert(
         self,
@@ -561,9 +581,8 @@ class TxnTable:
         (key includes the partition column) for full serializability.
         """
         snap = self.snapshot()
-        if app_id is not None and batch_id is not None:
-            if snap.txns.get(app_id, -1) >= int(batch_id):
-                return []
+        if self._already_committed(snap, app_id, batch_id):
+            return []
 
         # Generated columns first: a derived partition column must exist
         # before the presence check below.
@@ -591,44 +610,30 @@ class TxnTable:
         if snap.version < 0 or not snap.files:
             # Empty table: everything is an insert.
             adds = self._stage_partitioned(df, part_col)
-            commit = {
-                "add": adds,
-                "remove": [],
-                "partition_col": part_col,
-                "schema_json": df.schema.json(),
-            }
-            if app_id is not None and batch_id is not None:
-                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
-            if self._try_commit(snap.version + 1, commit):
-                return sorted({a["partition"] for a in adds})
-            # Lost the race to create the table: it may have rows now, so
-            # restart the whole merge against the fresh log (staged files
-            # stay invisible orphans for vacuum).
-            return self.merge_upsert(spark, df, keys, partition_col, app_id, batch_id)
+            parts = sorted({a["partition"] for a in adds})
+            meta = {"partition_col": part_col, "schema_json": df.schema.json()}
+            try:
+                return self._replace_partitions(
+                    snap, parts, adds, _restart, app_id, batch_id, **meta
+                )
+            except ConcurrentModificationError:
+                # Lost the race to create the table: it may have rows now, so
+                # restart the whole merge against the fresh log (staged files
+                # stay invisible orphans for vacuum).
+                return self.merge_upsert(
+                    spark, df, keys, partition_col, app_id, batch_id
+                )
 
-        # Phase 1 — find affected partitions. The target scan reads only the
-        # key + partition columns (column pruning), and the source keyset is
-        # broadcast: no target shuffle, no wide rows moved. All reads pin to
-        # snap.version so the rewrite is computed from ONE snapshot.
+        # Phase 1 — find affected partitions. All reads pin to snap.version
+        # so the rewrite is computed from ONE snapshot.
         src_keys = df.select(*keys).distinct()
         src_parts = {
             str(r[0])
             for r in df.select(F.col(part_col).cast("string")).distinct().collect()
         }
-        matched_parts = {
-            str(r[0])
-            for r in self.read(spark, version=snap.version)
-            .select(*keys, part_col)
-            .join(F.broadcast(src_keys), keys, "left_semi")
-            .select(F.col(part_col).cast("string"))
-            .distinct()
-            .collect()
-        }
-        affected = sorted(src_parts | matched_parts)
-        read_files = frozenset(
-            p for p, pv in snap.files.items() if pv in affected
+        affected = sorted(
+            src_parts | self._matched_partitions(spark, snap, src_keys, keys)
         )
-        read_dvs = self._dv_cover(snap, set(affected))
 
         # Phase 2 — partition-scoped read-modify-write.
         old = self.read(spark, partition_values=affected, version=snap.version)
@@ -638,34 +643,43 @@ class TxnTable:
                 f"source is missing table columns {missing}; align the source "
                 "or add_columns() the table first"
             )
-        unknown = [c for c in df.columns if c not in old.columns]
-        if unknown:
-            raise ValueError(
-                f"source has columns unknown to the table {unknown}; "
-                "add_columns() the table first"
-            )
+        _reject_unknown_columns(df, old.columns)
         merged = old.join(F.broadcast(src_keys), keys, "left_anti").unionByName(
             df.select(*old.columns)
         )
         adds = self._stage_partitioned(merged, part_col)
+        guard = self._unchanged_guard(snap, affected, "merge_upsert")
+        return self._replace_partitions(
+            snap, affected, adds, guard, app_id, batch_id, partition_col=part_col
+        )
 
-        while True:
-            commit = {
-                "add": adds,
-                "remove": [p for p, pv in snap.files.items() if pv in affected],
-                "partition_col": part_col,
-            }
-            if app_id is not None and batch_id is not None:
-                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
-            if self._try_commit(snap.version + 1, commit):
-                return affected
-            # Lost the commit race: re-read, re-validate idempotency, then
-            # retry only if the rival left our read set untouched.
-            snap = self.snapshot()
-            if app_id is not None and batch_id is not None:
-                if snap.txns.get(app_id, -1) >= int(batch_id):
-                    return []
-            self._check_unchanged(snap, affected, read_files, "merge_upsert", read_dvs)
+    def _replace_partitions(
+        self, snap, parts, adds, guard, app_id=None, batch_id=None, **meta
+    ) -> list:
+        """Commit ``adds`` (plus any ``meta`` actions) in place of every file
+        of the ``parts`` partitions. Returns ``parts``, or ``[]`` when the
+        (app_id, batch_id) marker was already committed."""
+
+        def make_commit(s: Snapshot) -> dict:
+            gone = [p for p, pv in s.files.items() if pv in parts]
+            return {"add": adds, "remove": gone, **meta}
+
+        v = self._commit(snap, make_commit, app_id, batch_id, guard)
+        return [] if v is None else parts
+
+    def _matched_partitions(self, spark, snap: Snapshot, keys_df, keys) -> set:
+        """The partitions of ``snap`` holding a key of ``keys_df``: a scan of
+        only the key + partition columns (column pruning), semi-joined to the
+        broadcast keyset — no target shuffle, no wide rows moved."""
+        return {
+            str(r[0])
+            for r in self.read(spark, version=snap.version)
+            .select(*keys, snap.partition_col)
+            .join(F.broadcast(keys_df.select(*keys)), keys, "left_semi")
+            .select(F.col(snap.partition_col).cast("string"))
+            .distinct()
+            .collect()
+        }
 
     def delete_keys(
         self,
@@ -688,49 +702,22 @@ class TxnTable:
         ``vacuum()`` — for a compliance delete, follow with ``vacuum``.
         """
         snap = self.snapshot()
-        if app_id is not None and batch_id is not None:
-            if snap.txns.get(app_id, -1) >= int(batch_id):
-                return []
+        if self._already_committed(snap, app_id, batch_id):
+            return []
         part_col = snap.partition_col
         if part_col is None or not snap.files:
             return []
 
         targets = keys_df.select(*keys).distinct()
-        affected = sorted(
-            str(r[0])
-            for r in self.read(spark, version=snap.version)
-            .select(*keys, part_col)
-            .join(F.broadcast(targets), keys, "left_semi")
-            .select(F.col(part_col).cast("string"))
-            .distinct()
-            .collect()
-        )
+        affected = sorted(self._matched_partitions(spark, snap, targets, keys))
         if not affected:
             return []
-        read_files = frozenset(
-            p for p, pv in snap.files.items() if pv in set(affected)
-        )
-        read_dvs = self._dv_cover(snap, set(affected))
-
         kept = self.read(
             spark, partition_values=affected, version=snap.version
         ).join(F.broadcast(targets), keys, "left_anti")
         adds = self._stage_partitioned(kept, part_col)
-
-        while True:
-            commit = {
-                "add": adds,
-                "remove": [p for p, pv in snap.files.items() if pv in affected],
-            }
-            if app_id is not None and batch_id is not None:
-                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
-            if self._try_commit(snap.version + 1, commit):
-                return affected
-            snap = self.snapshot()
-            if app_id is not None and batch_id is not None:
-                if snap.txns.get(app_id, -1) >= int(batch_id):
-                    return []
-            self._check_unchanged(snap, affected, read_files, "delete_keys", read_dvs)
+        guard = self._unchanged_guard(snap, affected, "delete_keys")
+        return self._replace_partitions(snap, affected, adds, guard, app_id, batch_id)
 
     def delete_keys_dv(
         self,
@@ -754,9 +741,8 @@ class TxnTable:
         purge should use ``delete_keys`` + ``vacuum`` or follow up with
         ``compact``."""
         snap = self.snapshot()
-        if app_id is not None and batch_id is not None:
-            if snap.txns.get(app_id, -1) >= int(batch_id):
-                return 0
+        if self._already_committed(snap, app_id, batch_id):
+            return 0
         if snap.partition_col is None or not snap.files:
             return 0
 
@@ -769,17 +755,13 @@ class TxnTable:
         scan_files = [os.path.join(self.path, p) for p in sorted(snap.files)]
         reader = spark.read
         if snap.schema_json:
-            reader = reader.schema(StructType.fromJson(json.loads(snap.schema_json)))
+            reader = reader.schema(snap.schema)
         raw = reader.parquet(*scan_files)
-        rel = F.expr(
-            "substring(_metadata.file_path, "
-            "instr(_metadata.file_path, '/_data/') + 1)"
-        )
         # Project the metadata columns BEFORE the join: _metadata resolves
         # only directly against the file-scan relation.
         tagged = raw.select(
             *keys,
-            rel.alias("file"),
+            F.expr(_REL_PATH).alias("file"),
             F.col("_metadata.row_index").alias("pos"),
             F.col(snap.partition_col).cast("string").alias("__part"),
         )
@@ -799,23 +781,12 @@ class TxnTable:
             return 0
         parts = sorted(r[0] for r in written.select("__part").distinct().collect())
         dv_rel = os.path.relpath(staging, self.path)
-        read_files = frozenset(
-            p for p, pv in snap.files.items() if pv in set(parts)
-        )
-        read_dvs = self._dv_cover(snap, set(parts))
-        while True:
-            commit = {"dv_add": {"path": dv_rel, "partitions": parts}}
-            if app_id is not None and batch_id is not None:
-                commit["txn"] = {"app_id": app_id, "batch_id": int(batch_id)}
-            if self._try_commit(snap.version + 1, commit):
-                return n
-            snap = self.snapshot()
-            if app_id is not None and batch_id is not None:
-                if snap.txns.get(app_id, -1) >= int(batch_id):
-                    return 0
-            # The DV's row positions are pinned to the files it was computed
-            # from: any rival rewrite of those partitions invalidates it.
-            self._check_unchanged(snap, parts, read_files, "delete_keys_dv", read_dvs)
+        dv = {"dv_add": {"path": dv_rel, "partitions": parts}}
+        # The DV's row positions are pinned to the files it was computed
+        # from: any rival rewrite of those partitions invalidates it.
+        guard = self._unchanged_guard(snap, parts, "delete_keys_dv")
+        v = self._commit(snap, lambda _s: dv, app_id, batch_id, guard)
+        return 0 if v is None else n
 
     # ------------------------------------------------------- schema evolution
 
@@ -825,20 +796,20 @@ class TxnTable:
         NULL because readers apply the committed schema; time travel to an
         earlier version still reads the pre-evolution schema. Returns the new
         log version."""
-        snap = self.snapshot()
-        if snap.schema_json is None:
-            raise ValueError("cannot evolve an empty table")
-        current = StructType.fromJson(json.loads(snap.schema_json))
-        existing = {f.name for f in current.fields}
         fields = list(new_fields.fields) if isinstance(new_fields, StructType) else list(new_fields)
-        for f in fields:
-            if f.name in existing:
-                raise ValueError(f"column {f.name!r} already exists")
-        evolved = StructType(current.fields + fields)
-        while True:
-            version = self.snapshot().version + 1
-            if self._try_commit(version, {"schema_json": evolved.json()}):
-                return version
+
+        def make_commit(snap: Snapshot) -> dict:
+            # Evolve the schema the commit lands on: a rival's column added
+            # since the first read must survive the retry.
+            current = snap.schema
+            if current is None:
+                raise ValueError("cannot evolve an empty table")
+            for f in fields:
+                if f.name in current.fieldNames():
+                    raise ValueError(f"column {f.name!r} already exists")
+            return {"schema_json": StructType(current.fields + fields).json()}
+
+        return self._commit(self.snapshot(), make_commit)
 
     # ------------------------------------------------------------------ read
 
@@ -877,11 +848,7 @@ class TxnTable:
                 or _file_may_match(snap.stats.get(rel, {}), where)
             )
         ]
-        schema = (
-            StructType.fromJson(json.loads(snap.schema_json))
-            if snap.schema_json
-            else None
-        )
+        schema = snap.schema
         if not files:
             return spark.createDataFrame([], schema or StructType([]))
         reader = spark.read
@@ -893,15 +860,11 @@ class TxnTable:
             # (relative path, row position) — deleted rows vanish without
             # their files ever having been rewritten.
             out_cols = df.columns
-            rel = F.expr(
-                "substring(_metadata.file_path, "
-                "instr(_metadata.file_path, '/_data/') + 1)"
-            )
             dv = spark.read.parquet(
                 *[os.path.join(self.path, p) for p in sorted(snap.dvs)]
             )
             df = (
-                df.withColumn("__dv_file", rel)
+                df.withColumn("__dv_file", F.expr(_REL_PATH))
                 .withColumn("__dv_pos", F.col("_metadata.row_index"))
                 .join(
                     # No forced broadcast: DV volume is O(deleted rows) and
@@ -962,9 +925,9 @@ class TxnTable:
         }
         if not targets:
             return 0
-        adds, removes = [], []
+        adds: list = []
         staged_dirs: list[str] = []
-        for pv, rels in sorted(targets.items()):
+        for pv in sorted(targets):
             staging = os.path.join(self.data_dir, uuid.uuid4().hex)
             staged_dirs.append(staging)
             # Read THROUGH the snapshot (committed schema + deletion vectors
@@ -978,20 +941,8 @@ class TxnTable:
             else:
                 out = src.coalesce(1)
             out.write.parquet(staging)
-            for root, _dirs, names in os.walk(staging):
-                for n in names:
-                    if n.endswith(".parquet"):
-                        adds.append(
-                            {
-                                "path": os.path.relpath(os.path.join(root, n), self.path),
-                                "partition": pv,
-                            }
-                        )
-            removes.extend(rels)
-        read_files = frozenset(removes)
-        targeted = sorted(targets, key=str)
-        targeted_set = set(targeted)
-        read_dvs = self._dv_cover(snap, targeted_set)
+            adds.extend(self._staged_adds(staging, pv))
+        targeted_set = set(targets)
         # DV entries whose every covered partition was rewritten are fully
         # materialized by this compaction — drop them from the live set.
         dv_drop = [
@@ -1005,7 +956,7 @@ class TxnTable:
         # dead rows and shrink its partition list, so partition-at-a-time
         # compaction retires the DV incrementally instead of pinning its
         # partitions merge-on-read (and blocking symlink manifests) forever.
-        removed_set = sorted(set(removes))
+        removed_set = sorted(p for rels in targets.values() for p in rels)
         dv_adds = []
         for p, parts in snap.dvs.items():
             if not parts or p in dv_drop or not (set(parts) & targeted_set):
@@ -1029,20 +980,14 @@ class TxnTable:
                     "partitions": sorted(set(parts) - targeted_set, key=str),
                 }
             )
+        dv_meta = {k: v for k, v in (("dv_remove", dv_drop), ("dv_add", dv_adds)) if v}
         try:
-            while True:
-                head = self.snapshot()
-                # A rival rewriting a targeted partition (MERGE, DELETE,
-                # another OPTIMIZE) invalidates the staged compaction —
-                # committing it would resurrect the pre-rival rows.
-                self._check_unchanged(head, targeted, read_files, "compact", read_dvs)
-                commit = {"add": adds, "remove": removes}
-                if dv_drop:
-                    commit["dv_remove"] = dv_drop
-                if dv_adds:
-                    commit["dv_add"] = dv_adds
-                if self._try_commit(head.version + 1, commit):
-                    return len(removes)
+            # A rival rewriting a targeted partition (MERGE, DELETE, another
+            # OPTIMIZE) invalidates the staged compaction — committing it
+            # would resurrect the pre-rival rows.
+            guard = self._unchanged_guard(snap, targeted_set, "compact")
+            self._replace_partitions(snap, targeted_set, adds, guard, **dv_meta)
+            return len(removed_set)
         except ConcurrentModificationError:
             # The staged rewrite (data AND DV parquet) will never be
             # committed — best-effort removal now instead of orphaning it
@@ -1114,27 +1059,15 @@ class TxnTable:
                 raise ValueError(
                     f"cannot restore to v{version}: {rel} was vacuumed"
                 )
-        while True:
-            head = self.snapshot()
-            commit = {
-                "add": [
-                    {
-                        "path": rel,
-                        "partition": pv,
-                        "stats": old.stats.get(rel),
-                    }
-                    for rel, pv in old.files.items()
-                ],
-                "remove": [rel for rel in head.files if rel not in old.files],
-                # Restore must also restore deletion-vector state: without
-                # this, DVs committed after `version` would keep deleting
-                # rows from the re-added files.
-                "dv_reset": old.dvs,
-            }
-            if old.schema_json:
-                commit["schema_json"] = old.schema_json
-            if self._try_commit(head.version + 1, commit):
-                return head.version + 1
+        # Restore must also restore deletion-vector state: without this, DVs
+        # committed after `version` would keep deleting rows from the
+        # re-added files.
+        commit = _state_actions(old)
+
+        def make_commit(head: Snapshot) -> dict:
+            return {**commit, "remove": [r for r in head.files if r not in old.files]}
+
+        return self._commit(self.snapshot(), make_commit)
 
     # --------------------------------------------------------------- vacuum
 
@@ -1197,41 +1130,25 @@ def clone_shallow(src: TxnTable, dst_path: str) -> TxnTable:
     if snap.version < 0:
         raise ValueError("cannot clone an empty table")
     dst = TxnTable(dst_path)
-    if dst.snapshot().version >= 0:
+    head = dst.snapshot()
+
+    def occupied(_fresh: Snapshot) -> None:
         raise ValueError(f"{dst_path} already holds a table")
+
+    if head.version >= 0:
+        occupied(head)
     commit = {
-        "add": [
-            {
-                "path": os.path.abspath(os.path.join(src.path, rel)),
-                "partition": pv,
-                "stats": snap.stats.get(rel),
-            }
-            for rel, pv in sorted(snap.files.items())
-        ],
+        **_state_actions(snap, lambda r: os.path.abspath(os.path.join(src.path, r))),
         "remove": [],
         "partition_col": snap.partition_col,
-        "dv_reset": {
-            os.path.abspath(os.path.join(src.path, p)): parts
-            for p, parts in snap.dvs.items()
-        },
     }
-    if snap.schema_json:
-        commit["schema_json"] = snap.schema_json
-    if not dst._try_commit(0, commit):
-        raise ValueError(f"{dst_path} already holds a table")
-    # Retry-loop these metadata commits like add_constraint does: a lost
+    dst._commit(head, lambda _s: commit, guard=occupied)
+    # Commit these metadata actions through the same retry loop: a lost
     # version race silently dropping a CHECK constraint or generated-column
     # rule would make later clone writes skip validation.
-    for name, expr in snap.constraints.items():
-        while not dst._try_commit(
-            dst.snapshot().version + 1,
-            {"set_constraint": {"name": name, "expr": expr}},
-        ):
-            pass
-    for name, expr in snap.generated.items():
-        while not dst._try_commit(
-            dst.snapshot().version + 1,
-            {"set_generated": {"name": name, "expr": expr}},
-        ):
-            pass
+    rules = {"set_constraint": snap.constraints, "set_generated": snap.generated}
+    for kind, named in rules.items():
+        for name, expr in named.items():
+            action = {kind: {"name": name, "expr": expr}}
+            dst._commit(dst.snapshot(), lambda _s, a=action: a)
     return dst

@@ -164,3 +164,13 @@ def test_logreg_gate_query_ranks_the_clean_source(spark):
     ties = sum(1 for p in pos for n in neg if p == n)
     auc = (wins + 0.5 * ties) / (len(pos) * len(neg))
     assert auc > 0.55, auc
+
+
+def test_fit_logreg_empty_input_raises_value_error(spark):
+    import pytest as _pytest
+
+    from data_lake_medallion_architecture_project_spark.operators.logreg import fit_logreg
+
+    empty = spark.createDataFrame([], "f double, y long")
+    with _pytest.raises(ValueError, match="empty input"):
+        fit_logreg(empty, ["f"], "y", n_iters=1)

@@ -277,6 +277,32 @@ def test_merge_upsert_after_evolution_writes_new_column(spark, tmp_path):
     assert got == [("d1", "a", 10, 7), ("d1", "b", 2, None)]
 
 
+def test_add_columns_race_keeps_rival_column(spark, tmp_path):
+    """A schema evolution that loses the commit race to a rival evolution
+    must widen the rival's schema, not the one it first read."""
+    from pyspark.sql.types import LongType, StructField
+
+    t = TxnTable(str(tmp_path / "t"))
+    t.merge_overwrite_partitions(_df(spark, [("d1", "a", 1)]), "date")
+    real_try = t._try_commit
+    stolen = {"done": False}
+
+    def rival_then_commit(version, commit):
+        if not stolen["done"]:
+            stolen["done"] = True
+            TxnTable(t.path).add_columns([StructField("c1", LongType(), True)])
+        return real_try(version, commit)
+
+    t._try_commit = rival_then_commit
+    t.add_columns([StructField("c2", LongType(), True)])
+    t._try_commit = real_try
+    import json
+
+    schema = json.loads(t.snapshot().schema_json)
+    assert [f["name"] for f in schema["fields"]] == ["date", "k", "v", "c1", "c2"]
+    assert t.read(spark).columns == ["date", "k", "v", "c1", "c2"]
+
+
 def test_add_columns_rejects_existing_name(spark, tmp_path):
     import pytest
     from pyspark.sql.types import LongType, StructField
@@ -450,6 +476,11 @@ def test_compact_zorder_clusters_for_file_skipping(spark, tmp_path):
             if fmax >= 0 and fmin <= 127:
                 hit += 1
         assert hit <= 6, (col, hit, len(files))
+    # The rewritten files keep their data-skipping stats, so the reader
+    # prunes from the log alone.
+    snap = t.snapshot()
+    assert set(snap.stats) == set(snap.files)
+    assert len(t.read(spark, where=[("x", "<=", 127)]).inputFiles()) < 8
 
 
 def test_history_and_restore_round_trip(spark, tmp_path):
@@ -1177,12 +1208,3 @@ def test_where_never_prunes_nan_rows(spark, tmp_path):
     assert got == ["b"]
     assert math.isnan  # keep the import honest
 
-
-def test_fit_logreg_empty_input_raises_value_error(spark):
-    import pytest as _pytest
-
-    from data_lake_medallion_architecture_project_spark.operators.logreg import fit_logreg
-
-    empty = spark.createDataFrame([], "f double, y long")
-    with _pytest.raises(ValueError, match="empty input"):
-        fit_logreg(empty, ["f"], "y", n_iters=1)
