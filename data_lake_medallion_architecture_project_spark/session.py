@@ -51,14 +51,23 @@ def get_spark(
         #    always sorting both sides (guide §3.1/§9). Not a local-only
         #    tune: the planner stays size-gated, AQE skew-split still
         #    applies, and SMJ remains for big⋈big joins that fail the hash
-        #    conditions. Re-proven round 16 under the driver's 3-session
-        #    protocol after the r15 evidence was flagged (VERDICT r15 §1);
-        #    see OPTIMIZATION_r16.md for the same-window A/B. The env knob
-        #    exists so the A/B is reproducible without editing this file.
+        #    conditions. No committed A/B backs this default yet
+        #    (OPTIMIZATION_r16.md was never filled in); ROADMAP direction 5
+        #    keeps or deletes it on one. The env knob exists so that A/B
+        #    runs without editing this file.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
         )
+        # -- Codegen: keep every generated class of the recurring medallion
+        #    loop. At the default 100 entries each warm lake_cycles cycle
+        #    (Silver ingest + Gold refresh of 3 domains, 21 Gold reads)
+        #    evicted and recompiled 155-159 Janino classes; with 1000 a warm
+        #    cycle compiles 0-16 (6 cycles x 3 seeds, 4 vCPUs). A/B together
+        #    with the one-plan door batches (AB_lake_cycles_codegen.json):
+        #    lake_cycles pass CPU lower in 12 of 16 pairs, median -26% over
+        #    12 fresh seeds; queries unresolved within its run-to-run spread.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # -- IO: vectorized parquet reader is on by default; keep split sizes
         #    large enough that small SF test files do not over-partition.
         .config("spark.sql.files.maxPartitionBytes", "128m")

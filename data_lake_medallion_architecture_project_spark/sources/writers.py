@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 
 def write_staging_csv(df: DataFrame, staging_root: str, domain: str, batch_id: str) -> str:
     """S4 staging CSV sink (sales_generator.py:117-119): one headered CSV
-    batch per generator tick. coalesce(1) mirrors the reference's
-    one-file-per-batch contract (batches are tens of rows)."""
+    batch per generator tick. The batch (tens of rows) is collected to the
+    driver with ``toPandas()`` and written by pandas ``to_csv`` as a single
+    file, the reference's one-file-per-batch contract."""
     path = os.path.join(staging_root, domain, f"{domain}_{batch_id}.csv")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     pdf = df.toPandas()

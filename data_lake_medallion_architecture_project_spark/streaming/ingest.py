@@ -23,7 +23,9 @@ the Silver write stays append-only and partition-pruned.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
@@ -32,6 +34,19 @@ from ..plans.silver import CLEANERS
 from ..schemas import BRONZE_SCHEMAS
 from ..sources.writers import write_silver_batch
 from .runner import run_door
+
+
+def _written_rows(path: str) -> int:
+    """Rows in the parquet files under ``path``, summed from their footers —
+    a driver-side metadata read, no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(root, name)).num_rows
+        for root, _dirs, names in os.walk(path)
+        for name in names
+        if name.endswith(".parquet")
+    )
 
 
 def run_incremental_ingest(
@@ -67,12 +82,20 @@ def run_incremental_ingest(
     def _sink(batch_df, batch_id: int) -> None:
         nonlocal written
         cleaned = cleaner(batch_df, processed_at)
-        n = cleaned.count()
-        if n:
-            # Idempotent: overwrite of the batchId-keyed subtree, so replay
-            # after a crash-before-checkpoint converges instead of duplicating.
-            write_silver_batch(cleaned, silver_root, domain, batch_id, ingest_time)
-            written += n
+        # Idempotent: overwrite of the batchId-keyed subtree, so replay
+        # after a crash-before-checkpoint converges instead of duplicating.
+        # One write, one plan: the row count comes from the written files'
+        # parquet footers rather than from a second run of the batch.
+        path = write_silver_batch(cleaned, silver_root, domain, batch_id, ingest_time)
+        n = _written_rows(path)
+        if not n:
+            # An empty batch leaves only _SUCCESS: remove it, and a domain
+            # dir it alone created, since a Silver dir without parquet files
+            # fails the Gold door's schema inference.
+            shutil.rmtree(path, ignore_errors=True)
+            with contextlib.suppress(OSError):
+                os.rmdir(os.path.dirname(path))
+        written += n
 
     run_door(stream, os.path.join(checkpoint_root, domain), _sink)
     return written

@@ -54,6 +54,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..plans.gold import GOLD_BUILDERS
 from ..storage import TxnTable
@@ -69,7 +70,12 @@ def gold_table(gold_root: str, table: str) -> TxnTable:
     return TxnTable(os.path.join(gold_root, table))
 
 
-def _scoped_silver(spark: SparkSession, silver_domain_dir: str, affected_dates: list):
+def _scoped_silver(
+    spark: SparkSession,
+    silver_domain_dir: str,
+    affected_dates: list,
+    schema: StructType | None = None,
+):
     """Silver restricted to the affected days — a *partition prune* when the
     tree is event-date partitioned, a scan filter otherwise.
 
@@ -78,8 +84,11 @@ def _scoped_silver(spark: SparkSession, silver_domain_dir: str, affected_dates: 
     scan's PartitionFilters and unaffected day directories are never listed
     into tasks; with the processing-date layout the equivalent predicate on
     ``to_date(timestamp)`` still bounds the recompute, at scan cost.
+    ``schema`` (partition columns included) skips the schema-inference job;
+    without it the schema is read from the files.
     """
-    silver = spark.read.parquet(silver_domain_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    silver = reader.parquet(silver_domain_dir)
     if "event_date" in silver.columns:
         return silver.filter(F.col("event_date").isin(affected_dates))
     return silver.filter(F.to_date("timestamp").isin(affected_dates))
@@ -93,6 +102,7 @@ def refresh_affected_dates(
     affected_dates: list,
     generated_at: str,
     batch_id: int | None = None,
+    schema: StructType | None = None,
 ) -> list[str]:
     """Recompute the given day partitions of every Gold table of a domain.
 
@@ -100,10 +110,12 @@ def refresh_affected_dates(
     builders — identical aggregation code to the full batch path — and MERGEs
     the results into each table's transaction log. ``batch_id`` (when driven
     from a stream) makes the merge a no-op on micro-batch replay.
+    ``schema`` is Silver's schema when the caller already has it (the
+    stream's batch schema), sparing a schema-inference job per call.
     """
     if not affected_dates:
         return []
-    scoped = _scoped_silver(spark, silver_domain_dir, affected_dates)
+    scoped = _scoped_silver(spark, silver_domain_dir, affected_dates, schema)
     written = []
     for table, builder in _domain_tables(domain).items():
         out = builder(scoped).withColumn("generated_at", F.lit(generated_at))
@@ -146,7 +158,8 @@ def run_incremental_gold_refresh(
             .collect()
         ]
         refresh_affected_dates(
-            spark, silver_dir, gold_root, domain, days, generated_at, batch_id=batch_id
+            spark, silver_dir, gold_root, domain, days, generated_at,
+            batch_id=batch_id, schema=batch_df.schema,
         )
         refreshed.update(days)
 

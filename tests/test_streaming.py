@@ -94,6 +94,31 @@ def test_ingest_crash_replay_no_duplicates(spark, tmp_path):
     assert spark.read.parquet(silver_path).count() == count_before  # ... idempotently
 
 
+def test_ingest_header_only_batch_writes_nothing(spark, tmp_path):
+    """A header-only Bronze CSV is an empty micro-batch: nothing is written
+    (no Silver parquet file, no leftover batch directory), and a following
+    non-empty file still ingests with the right count and reads back."""
+    from data_lake_medallion_architecture_project_spark.sources.readers import read_silver
+
+    domain = "sales"
+    bronze, silver, ckpt = (str(tmp_path / p) for p in ("bronze", "silver", "ckpt"))
+
+    _write_bronze_csv(bronze, domain, [], "empty")
+    assert run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS) == 0
+    assert not os.path.exists(os.path.join(silver, domain))
+
+    b1 = GENERATORS[domain](seed=5)
+    _write_bronze_csv(bronze, domain, b1, "batch1")
+    n1 = run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS)
+    assert n1 == len({r["sale_id"] for r in b1})
+
+    # An empty batch after a non-empty one leaves the earlier batch alone.
+    _write_bronze_csv(bronze, domain, [], "empty2")
+    assert run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=RUN_TS) == 0
+    assert os.listdir(os.path.join(silver, domain)) == ["ingest_batch=1"]
+    assert read_silver(spark, silver, domain).count() == n1
+
+
 def test_full_medallion_flow_to_gold(spark, tmp_path):
     bronze, silver, ckpt, gold = (
         str(tmp_path / p) for p in ("bronze", "silver", "ckpt", "gold")
