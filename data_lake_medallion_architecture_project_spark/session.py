@@ -65,8 +65,8 @@ def get_spark(
         #    evicted and recompiled 155-159 Janino classes; with 1000 a warm
         #    cycle compiles 0-16 (6 cycles x 3 seeds, 4 vCPUs). A/B together
         #    with the one-plan door batches (AB_lake_cycles_codegen.json):
-        #    lake_cycles pass CPU lower in 12 of 16 pairs, median -26% over
-        #    12 fresh seeds; queries unresolved within its run-to-run spread.
+        #    lake_cycles pass CPU lower in 22 of 26 pairs (medians -26% and
+        #    -16% on two sets of unseen seeds); queries flat (14 pairs).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # -- IO: vectorized parquet reader is on by default; keep split sizes
         #    large enough that small SF test files do not over-partition.
