@@ -7,17 +7,18 @@ Mirror of ``/root/reference/dags/data_lake_pipeline.py:46-149``:
 * ``data_lake_pipeline_dag`` (every 30 min) — ``bronze_to_silver`` then
   ``silver_to_gold``.
 
-The task CALLABLES below are plain functions over the same engine code the
-CLI (``python -m data_lake_medallion_architecture_project_spark.pipeline``) and the tests run —
-Airflow adds scheduling only, no logic lives here. The module imports
-cleanly WITHOUT Airflow (the DAG objects are built only when the
-``airflow`` package is importable), so the callables stay unit-testable in
-environments that schedule with cron/systemd instead.
+The task CALLABLES below are one call (or one loop over domains) into
+``data_lake_medallion_architecture_project_spark.pipeline``, the functions the
+CLI runs — Airflow adds scheduling only; the lake layout, the writers and the
+schemas live in the package. The module imports cleanly WITHOUT Airflow (the
+DAG objects are built only when the ``airflow`` package is importable), so
+the callables stay unit-testable in environments that schedule with
+cron/systemd instead.
 
 Differences from the reference, by design (Spark-first equivalents):
 
 * one generator task per domain fans out over ``GENERATORS`` instead of
-  three hand-written modules;
+  three hand-written modules, and runs without a SparkSession;
 * Bronze→Silver is Structured Streaming ``Trigger.AvailableNow`` with a
   checkpoint (incremental, exactly-once) instead of a processed-file
   ledger with a crash window;
@@ -25,8 +26,7 @@ Differences from the reference, by design (Spark-first equivalents):
   partitions touched by new Silver rows are re-aggregated and MERGEd).
 
 Configuration: ``DATA_LAKE_DIR`` env var (default ``/tmp/data_lake``)
-locates the lake root; ``DATA_LAKE_GEN_TICKS`` (default 1) sets rows per
-generator run, matching the reference's fixed per-tick batch sizes.
+locates the lake root.
 """
 
 from __future__ import annotations
@@ -37,6 +37,8 @@ from datetime import datetime, timedelta, timezone
 
 logger = logging.getLogger(__name__)
 
+# The package's GENERATORS keys, spelled out so that parsing the DAG file
+# does not import pyspark.
 _DOMAINS = ("sales", "customer_events", "inventory")
 
 
@@ -57,73 +59,33 @@ def generate_domain(domain: str) -> None:
     with fixed row counts per tick; the tick index here is the count of
     staged files so far, which keeps re-runs append-only (new filename,
     new seed offset) exactly like the reference's timestamped CSVs."""
-    from data_lake_medallion_architecture_project_spark.schemas import BRONZE_SCHEMAS
-    from data_lake_medallion_architecture_project_spark.sources.synthetic import GENERATORS
-    from data_lake_medallion_architecture_project_spark.sources.writers import (
-        ingest_to_bronze,
-        write_staging_csv,
-    )
+    from data_lake_medallion_architecture_project_spark.pipeline import land_tick, next_tick
 
-    spark = _spark()
     work = _work_dir()
-    os.makedirs(work, exist_ok=True)
-    staging = os.path.join(work, "staging", domain)
-    tick = len(os.listdir(staging)) if os.path.isdir(staging) else 0
-    rows = GENERATORS[domain](seed=tick)
-    cols = [f.name for f in BRONZE_SCHEMAS[domain].fields]
-    df = spark.createDataFrame(rows).select(*cols)
-    path = write_staging_csv(
-        df, os.path.join(work, "staging"), domain, f"t{tick:05d}"
-    )
-    dest = ingest_to_bronze(path, os.path.join(work, "bronze"), domain)
+    tick = next_tick(work, domain)
+    dest = land_tick(work, domain, tick, seed=0)
     logger.info("staged %s tick %d -> %s", domain, tick, dest)
 
 
 def bronze_to_silver() -> None:
     """Pipeline-DAG task 1: incremental Bronze→Silver for every domain."""
-    from data_lake_medallion_architecture_project_spark.streaming.ingest import (
-        run_incremental_ingest,
-    )
+    from data_lake_medallion_architecture_project_spark.pipeline import ingest_domain
 
-    spark = _spark()
-    work = _work_dir()
+    spark, work = _spark(), _work_dir()
     processed_at = datetime.now(timezone.utc).isoformat()
-    bronze = os.path.join(work, "bronze")
     for domain in _DOMAINS:
-        if not os.path.isdir(os.path.join(bronze, domain)):
-            continue
-        n = run_incremental_ingest(
-            spark,
-            bronze,
-            os.path.join(work, "silver"),
-            os.path.join(work, "_checkpoints"),
-            domain,
-            processed_at=processed_at,
-        )
+        n = ingest_domain(spark, work, domain, processed_at)
         logger.info("bronze_to_silver %s: %s rows", domain, n)
 
 
 def silver_to_gold() -> None:
     """Pipeline-DAG task 2: incremental Silver→Gold refresh per domain."""
-    from data_lake_medallion_architecture_project_spark.streaming.refresh import (
-        run_incremental_gold_refresh,
-    )
+    from data_lake_medallion_architecture_project_spark.pipeline import refresh_domain
 
-    spark = _spark()
-    work = _work_dir()
+    spark, work = _spark(), _work_dir()
     generated_at = datetime.now(timezone.utc).isoformat()
-    silver = os.path.join(work, "silver")
     for domain in _DOMAINS:
-        if not os.path.isdir(os.path.join(silver, domain)):
-            continue
-        days = run_incremental_gold_refresh(
-            spark,
-            silver,
-            os.path.join(work, "gold"),
-            os.path.join(work, "_checkpoints"),
-            domain,
-            generated_at=generated_at,
-        )
+        days = refresh_domain(spark, work, domain, generated_at)
         logger.info("silver_to_gold %s: refreshed days %s", domain, days)
 
 

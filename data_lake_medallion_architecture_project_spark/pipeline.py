@@ -9,9 +9,9 @@ This module is the Spark-first equivalent, runnable without a scheduler:
     python -m data_lake_medallion_architecture_project_spark.pipeline --work-dir /tmp/lake --gen-ticks 3
 
 One invocation = one pipeline cycle: ``--gen-ticks`` generator ticks (each
-writes one staging CSV per domain and copies it into the Hive-partitioned
-Bronze tree, like the 5-minute DAG), then one processing pass (like the
-30-minute DAG):
+writes one staging CSV per domain on the driver, with no Spark job, and
+copies it into the Hive-partitioned Bronze tree, like the 5-minute DAG), then
+one processing pass (like the 30-minute DAG):
 
 * Bronze→Silver via Structured Streaming ``Trigger.AvailableNow`` with a
   checkpoint under the work dir — incremental and exactly-once, so re-running
@@ -23,7 +23,11 @@ Bronze tree, like the 5-minute DAG), then one processing pass (like the
 
 Re-invoking on a cron/systemd timer reproduces the reference's cadence
 exactly; every stage is the same code the tests and registry queries
-exercise, just wired end to end.
+exercise, just wired end to end. The Airflow DAGs (``dags/``) schedule the
+same steps: ``land_tick`` per generator task, ``ingest_domain`` and
+``refresh_domain`` per pipeline task, and hold no lake layout of their own
+(``staging``, ``bronze``, ``silver``, ``gold`` and ``_checkpoints`` under the
+work dir).
 """
 
 from __future__ import annotations
@@ -35,56 +39,83 @@ from datetime import datetime, timezone
 from pyspark.sql import SparkSession
 
 from .plans.gold import GOLD_BUILDERS
-from .schemas import BRONZE_SCHEMAS
 from .session import get_spark
 from .sources.synthetic import GENERATORS
-from .sources.writers import ingest_to_bronze, write_staging_csv
+from .sources.writers import ingest_to_bronze, write_staging_rows
 from .streaming.ingest import run_incremental_ingest
 from .streaming.refresh import gold_table, run_incremental_gold_refresh
 
-LAYERS = ("staging", "bronze", "silver", "gold", "_checkpoints")
+def _dirs(work_dir: str, *layers: str) -> list[str]:
+    return [os.path.join(work_dir, layer) for layer in layers]
 
 
-def run_generator_tick(
-    spark: SparkSession, work_dir: str, tick: int, seed: int
-) -> dict[str, str]:
-    """One generator-DAG tick: rows → staging CSV → Bronze copy, per domain."""
-    staged = {}
-    for domain, gen in GENERATORS.items():
-        rows = gen(seed=seed + tick)
-        # Bronze CSVs are parsed with a declared schema, which binds by
-        # POSITION — stage the columns in schema order.
-        cols = [f.name for f in BRONZE_SCHEMAS[domain].fields]
-        df = spark.createDataFrame(rows).select(*cols)
-        path = write_staging_csv(
-            df, os.path.join(work_dir, "staging"), domain, f"t{tick:05d}"
-        )
-        staged[domain] = ingest_to_bronze(
-            path, os.path.join(work_dir, "bronze"), domain
-        )
-    return staged
+def next_tick(work_dir: str, domain: str) -> int:
+    """Ticks of ``domain`` staged so far: the next tick's index. A scheduler
+    that lands one tick per fire stays append-only (new filename, new seed
+    offset), like the reference's timestamped CSVs."""
+    staging = os.path.join(work_dir, "staging", domain)
+    return len(os.listdir(staging)) if os.path.isdir(staging) else 0
+
+
+def land_tick(
+    work_dir: str, domain: str, tick: int, seed: int, now: datetime | None = None
+) -> str:
+    """One generator tick of ``domain``: rows → staging CSV → Bronze copy.
+
+    Runs on the driver alone (no SparkSession): the rows are written by
+    ``write_staging_rows`` in Bronze schema order, so a column that is null
+    in every row lands as empty fields instead of failing type inference.
+    ``now`` stamps the rows and the Bronze partition (default: wall clock).
+    Returns the Bronze path."""
+    staging, bronze = _dirs(work_dir, "staging", "bronze")
+    rows = GENERATORS[domain](seed=seed + tick, now=now)
+    path = write_staging_rows(rows, staging, domain, f"t{tick:05d}")
+    return ingest_to_bronze(path, bronze, domain, ingest_time=now)
+
+
+def run_generator_tick(work_dir: str, tick: int, seed: int) -> dict[str, str]:
+    """One generator-DAG tick: :func:`land_tick` for every domain."""
+    return {domain: land_tick(work_dir, domain, tick, seed) for domain in GENERATORS}
+
+
+def ingest_domain(
+    spark: SparkSession, work_dir: str, domain: str, processed_at: str
+) -> int | None:
+    """Incremental Bronze→Silver for ``domain``: Silver rows written, or
+    ``None`` when the domain has no Bronze yet."""
+    bronze, silver, ckpt = _dirs(work_dir, "bronze", "silver", "_checkpoints")
+    if not os.path.isdir(os.path.join(bronze, domain)):
+        return None
+    return run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=processed_at)
+
+
+def refresh_domain(
+    spark: SparkSession, work_dir: str, domain: str, generated_at: str
+) -> list | None:
+    """Incremental Silver→Gold for ``domain``: the refreshed Gold days, or
+    ``None`` when the domain has no Silver yet."""
+    silver, gold, ckpt = _dirs(work_dir, "silver", "gold", "_checkpoints")
+    if not os.path.isdir(os.path.join(silver, domain)):
+        return None
+    return run_incremental_gold_refresh(
+        spark, silver, gold, ckpt, domain, generated_at=generated_at
+    )
 
 
 def run_processing_pass(
     spark: SparkSession, work_dir: str, processed_at: str | None = None
 ) -> dict[str, object]:
-    """One pipeline-DAG pass: incremental Bronze→Silver, then Silver→Gold."""
+    """One pipeline-DAG pass, per domain: Bronze→Silver, then Silver→Gold."""
     processed_at = processed_at or datetime.now(timezone.utc).isoformat()
-    bronze = os.path.join(work_dir, "bronze")
-    silver = os.path.join(work_dir, "silver")
-    gold = os.path.join(work_dir, "gold")
-    ckpt = os.path.join(work_dir, "_checkpoints")
     stats: dict[str, object] = {"silver_rows": {}, "gold_days": {}}
     for domain in GENERATORS:
-        if not os.path.isdir(os.path.join(bronze, domain)):
+        rows = ingest_domain(spark, work_dir, domain, processed_at)
+        if rows is None:
             continue
-        stats["silver_rows"][domain] = run_incremental_ingest(
-            spark, bronze, silver, ckpt, domain, processed_at=processed_at
-        )
-        if os.path.isdir(os.path.join(silver, domain)):
-            stats["gold_days"][domain] = run_incremental_gold_refresh(
-                spark, silver, gold, ckpt, domain, generated_at=processed_at
-            )
+        stats["silver_rows"][domain] = rows
+        days = refresh_domain(spark, work_dir, domain, processed_at)
+        if days is not None:
+            stats["gold_days"][domain] = days
     return stats
 
 
@@ -103,7 +134,7 @@ def run_pipeline(
     """
     os.makedirs(work_dir, exist_ok=True)
     for tick in range(gen_ticks):
-        run_generator_tick(spark, work_dir, tick, seed)
+        run_generator_tick(work_dir, tick, seed)
     return run_processing_pass(spark, work_dir, processed_at)
 
 

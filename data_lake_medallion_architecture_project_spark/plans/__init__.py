@@ -9,10 +9,6 @@ from . import sqlops  # noqa: F401,E402
 from . import advanced  # noqa: F401,E402
 from . import tpch2  # noqa: F401,E402
 from . import training  # noqa: F401,E402
-
-# compression registers LAST on purpose: the driver's CORRECTNESS window
-# records the first 50 of iteration order, and round-5 additions must not
-# displace the legacy queries being certified this round.
 from . import compression  # noqa: F401,E402
 from . import tokenization  # noqa: F401,E402
 from . import curation  # noqa: F401,E402  (round 6 — newest registers last)

@@ -12,7 +12,7 @@ reference, whose per-process ``PRODUCT_ID_MAP`` is unstable across runs
 Two surfaces:
 
 * ``gen_*_batch(seed, n)`` — driver-side row dicts (the reference's scale:
-  tens of rows per tick), fed to ``spark.createDataFrame``;
+  tens of rows per tick), landed by ``writers.write_staging_rows``;
 * ``distributed_sales(spark, n, seed)`` — ``spark.range`` + column exprs for
   volume testing: generation happens on executors, no driver materialization.
 """

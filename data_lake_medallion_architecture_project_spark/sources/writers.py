@@ -2,37 +2,66 @@
 
 Replaces ``/root/reference/storage/local_storage.py``:
 
+* staging CSV sink (sales_generator.py:106-119) → one headered CSV per
+  generator tick, written on the driver with the ``csv`` module — no Spark
+  job and no type inference;
 * Hive path builder (:33-41) → ``partitionBy("year","month","day")`` — Spark
   writes the same ``year=YYYY/month=MM/day=DD`` tree and gets partition
   pruning on read for free. Partitions derive from *processing* date, like the
   reference (ingest-time, not event-time).
-* Silver parquet sink (:111-126) → partitioned append.
-* Gold snapshot sink (:144-155) → append with a run-constant ``generated_at``
-  column instead of timestamped filenames; readers select the latest run.
+* Silver parquet sink (:111-126) → idempotent per-micro-batch overwrite.
 
-At scale the append-only layout keeps writes conflict-free across executors;
-compaction/Delta is the upgrade path, not required for parity.
+Gold goes through the transactional table log (``storage/txnlog.py``), not
+through a sink here.
 """
 
 from __future__ import annotations
 
+import csv
 import os
+from collections.abc import Iterable, Mapping
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import BRONZE_SCHEMAS
 
-def write_staging_csv(df: DataFrame, staging_root: str, domain: str, batch_id: str) -> str:
+
+def write_staging_rows(
+    rows: Iterable[Mapping], staging_root: str, domain: str, batch_id: str
+) -> str:
     """S4 staging CSV sink (sales_generator.py:117-119): one headered CSV
-    batch per generator tick. The batch (tens of rows) is collected to the
-    driver with ``toPandas()`` and written by pandas ``to_csv`` as a single
-    file, the reference's one-file-per-batch contract."""
+    batch per generator tick, the reference's one-file-per-batch contract.
+
+    Bronze CSVs are parsed with a declared schema, which binds by POSITION,
+    so columns go out in ``BRONZE_SCHEMAS[domain]`` order. Columns the schema
+    declares ``double`` are written as ``float`` (``3`` → ``3.0``, as pandas
+    wrote them) and ``None`` as an empty field. The header is written even
+    for an empty batch."""
+    fields = BRONZE_SCHEMAS[domain].fields
+    double = [f.dataType.typeName() == "double" for f in fields]
     path = os.path.join(staging_root, domain, f"{domain}_{batch_id}.csv")
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pdf = df.toPandas()
-    pdf.to_csv(path, index=False)
+    with open(path, "w", newline="") as fh:
+        w = csv.writer(fh, lineterminator="\n")
+        w.writerow([f.name for f in fields])
+        for r in rows:
+            w.writerow(
+                [
+                    None if (v := r.get(f.name)) is None else float(v) if dbl else v
+                    for f, dbl in zip(fields, double)
+                ]
+            )
     return path
+
+
+def write_staging_csv(df: DataFrame, staging_root: str, domain: str, batch_id: str) -> str:
+    """:func:`write_staging_rows` for a Bronze-schema DataFrame: the batch
+    (tens of rows) is collected to the driver first."""
+    return write_staging_rows(
+        (r.asDict() for r in df.collect()), staging_root, domain, batch_id
+    )
 
 
 def ingest_to_bronze(
@@ -62,20 +91,6 @@ def _with_ingest_partitions(df: DataFrame, ingest_time: datetime | None = None) 
         .withColumn("month", F.lit(f"{t.month:02d}"))
         .withColumn("day", F.lit(f"{t.day:02d}"))
     )
-
-
-def write_silver(
-    df: DataFrame, silver_root: str, domain: str, ingest_time: datetime | None = None
-) -> str:
-    """Append a cleaned batch into the partitioned Silver tree."""
-    path = os.path.join(silver_root, domain)
-    (
-        _with_ingest_partitions(df, ingest_time)
-        .write.mode("append")
-        .partitionBy("year", "month", "day")
-        .parquet(path)
-    )
-    return path
 
 
 def write_silver_batch(
@@ -112,7 +127,7 @@ def write_silver_event_partitioned(
     """Silver laid out by **event** date: ``event_date=YYYY-MM-DD`` partitions
     derived from the row's ``timestamp``.
 
-    The processing-date layout (``write_silver``) preserves Bronze ingest
+    The processing-date layout (``write_silver_batch``) preserves Bronze ingest
     lineage but makes the incremental Gold refresh's affected-day filter a
     full-tree scan filter. This layout turns that filter into a directory
     prune (`refresh._scoped_silver` picks it up automatically): refreshing one
@@ -133,19 +148,3 @@ def write_silver_event_partitioned(
     out = df.withColumn("event_date", F.to_date("timestamp"))
     out.write.mode(mode).partitionBy("event_date").parquet(path)
     return path
-
-
-def write_gold_snapshot(df: DataFrame, gold_root: str, table: str) -> str:
-    """Append a full Gold snapshot; ``generated_at`` (already stamped by the
-    builder) identifies the run, mirroring the timestamped-file convention."""
-    path = os.path.join(gold_root, table)
-    df.write.mode("append").parquet(path)
-    return path
-
-
-def read_latest_gold(spark, gold_root: str, table: str) -> DataFrame:
-    """Read only the most recent snapshot of a Gold table."""
-    path = os.path.join(gold_root, table)
-    df = spark.read.parquet(path)
-    latest = df.select(F.max("generated_at").alias("g")).first()["g"]
-    return df.filter(F.col("generated_at") == latest)

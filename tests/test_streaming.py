@@ -1,20 +1,18 @@
 """End-to-end medallion flow: generators → Bronze CSV → incremental Silver
-ingest (Structured Streaming, AvailableNow) → Gold snapshot.
+ingest (Structured Streaming, AvailableNow) → Gold builders.
 
 Covers the reference's idempotence contract (re-run with no new files is a
 no-op — bronze_to_silver.py:198-200) without its ledger crash window."""
 
 from __future__ import annotations
 
-import csv
 import os
 
 import pytest
 
 from data_lake_medallion_architecture_project_spark.plans.gold import build_all_gold
-from data_lake_medallion_architecture_project_spark.schemas import BRONZE_SCHEMAS
 from data_lake_medallion_architecture_project_spark.sources.synthetic import GENERATORS
-from data_lake_medallion_architecture_project_spark.sources.writers import read_latest_gold, write_gold_snapshot
+from data_lake_medallion_architecture_project_spark.sources.writers import write_staging_rows
 from data_lake_medallion_architecture_project_spark.streaming.ingest import run_incremental_ingest
 
 RUN_TS = "2026-08-13T00:00:00+00:00"
@@ -25,15 +23,8 @@ DOMAIN_KEYS = {"sales": "sale_id", "customer_events": "event_id", "inventory": "
 
 
 def _write_bronze_csv(root: str, domain: str, batch: list[dict], name: str) -> str:
-    d = os.path.join(root, domain)
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"{name}.csv")
-    cols = [f.name for f in BRONZE_SCHEMAS[domain].fields]
-    with open(path, "w", newline="") as fh:
-        w = csv.DictWriter(fh, fieldnames=cols)
-        w.writeheader()
-        w.writerows(batch)
-    return path
+    """Land ``batch`` as one Bronze CSV with the production formatter."""
+    return write_staging_rows(batch, root, domain, name)
 
 
 @pytest.mark.parametrize("domain", ["sales", "customer_events", "inventory"])
@@ -120,9 +111,7 @@ def test_ingest_header_only_batch_writes_nothing(spark, tmp_path):
 
 
 def test_full_medallion_flow_to_gold(spark, tmp_path):
-    bronze, silver, ckpt, gold = (
-        str(tmp_path / p) for p in ("bronze", "silver", "ckpt", "gold")
-    )
+    bronze, silver, ckpt = (str(tmp_path / p) for p in ("bronze", "silver", "ckpt"))
     for domain, gen in GENERATORS.items():
         for seed in (10, 11):
             _write_bronze_csv(bronze, domain, gen(seed=seed, n=40), f"b{seed}")
@@ -133,10 +122,6 @@ def test_full_medallion_flow_to_gold(spark, tmp_path):
     }
     gold_frames = build_all_gold(silver_frames, RUN_TS)
     assert len(gold_frames) == 7
-    for table, df in gold_frames.items():
-        write_gold_snapshot(df, gold, table)
-        back = read_latest_gold(spark, gold, table)
-        assert back.count() == df.count(), table
 
     # Spot-check: Gold revenue equals the valid-row revenue in Silver.
     import pyspark.sql.functions as F
