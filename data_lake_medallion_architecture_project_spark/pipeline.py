@@ -45,9 +45,6 @@ from .sources.writers import ingest_to_bronze, write_staging_rows
 from .streaming.ingest import run_incremental_ingest
 from .streaming.refresh import gold_table, run_incremental_gold_refresh
 
-def _dirs(work_dir: str, *layers: str) -> list[str]:
-    return [os.path.join(work_dir, layer) for layer in layers]
-
 
 def next_tick(work_dir: str, domain: str) -> int:
     """Ticks of ``domain`` staged so far: the next tick's index. A scheduler
@@ -57,20 +54,16 @@ def next_tick(work_dir: str, domain: str) -> int:
     return len(os.listdir(staging)) if os.path.isdir(staging) else 0
 
 
-def land_tick(
-    work_dir: str, domain: str, tick: int, seed: int, now: datetime | None = None
-) -> str:
+def land_tick(work_dir: str, domain: str, tick: int, seed: int) -> str:
     """One generator tick of ``domain``: rows → staging CSV → Bronze copy.
 
     Runs on the driver alone (no SparkSession): the rows are written by
     ``write_staging_rows`` in Bronze schema order, so a column that is null
     in every row lands as empty fields instead of failing type inference.
-    ``now`` stamps the rows and the Bronze partition (default: wall clock).
     Returns the Bronze path."""
-    staging, bronze = _dirs(work_dir, "staging", "bronze")
-    rows = GENERATORS[domain](seed=seed + tick, now=now)
-    path = write_staging_rows(rows, staging, domain, f"t{tick:05d}")
-    return ingest_to_bronze(path, bronze, domain, ingest_time=now)
+    rows = GENERATORS[domain](seed=seed + tick)
+    path = write_staging_rows(rows, os.path.join(work_dir, "staging"), domain, f"t{tick:05d}")
+    return ingest_to_bronze(path, os.path.join(work_dir, "bronze"), domain)
 
 
 def run_generator_tick(work_dir: str, tick: int, seed: int) -> dict[str, str]:
@@ -83,10 +76,13 @@ def ingest_domain(
 ) -> int | None:
     """Incremental Bronze→Silver for ``domain``: Silver rows written, or
     ``None`` when the domain has no Bronze yet."""
-    bronze, silver, ckpt = _dirs(work_dir, "bronze", "silver", "_checkpoints")
+    bronze = os.path.join(work_dir, "bronze")
     if not os.path.isdir(os.path.join(bronze, domain)):
         return None
-    return run_incremental_ingest(spark, bronze, silver, ckpt, domain, processed_at=processed_at)
+    return run_incremental_ingest(
+        spark, bronze, os.path.join(work_dir, "silver"),
+        os.path.join(work_dir, "_checkpoints"), domain, processed_at=processed_at,
+    )
 
 
 def refresh_domain(
@@ -94,11 +90,12 @@ def refresh_domain(
 ) -> list | None:
     """Incremental Silver→Gold for ``domain``: the refreshed Gold days, or
     ``None`` when the domain has no Silver yet."""
-    silver, gold, ckpt = _dirs(work_dir, "silver", "gold", "_checkpoints")
+    silver = os.path.join(work_dir, "silver")
     if not os.path.isdir(os.path.join(silver, domain)):
         return None
     return run_incremental_gold_refresh(
-        spark, silver, gold, ckpt, domain, generated_at=generated_at
+        spark, silver, os.path.join(work_dir, "gold"),
+        os.path.join(work_dir, "_checkpoints"), domain, generated_at=generated_at,
     )
 
 
