@@ -43,54 +43,44 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return dot(a, b) / (norm_a * norm_b)
 
 
-def _dot_seq_arrow_fn():
-    """Build the Arrow-vectorized twin of :func:`dot` (round 15, guide §4.2).
+def fold_sum(prods: np.ndarray) -> np.ndarray:
+    """Row sums of an ``(n, d)`` double matrix in the fold's order: the
+    strictly sequential running sum ``((0+p0)+p1)+…`` that :func:`dot`'s
+    ``aggregate`` and DuckDB's ``list_sum`` compute. The leading 0.0 column
+    reproduces the fold's 0.0 seed exactly (down to +0.0 vs -0.0 on
+    all-negative-zero products), and ``np.add.accumulate`` is defined as the
+    sequential running sum, so its last element is bit-identical to the
+    fold's."""
+    seeded = np.concatenate(
+        [np.zeros((prods.shape[0], 1), dtype=np.float64), prods], axis=1
+    )
+    return np.add.accumulate(seeded, axis=1, dtype=np.float64)[:, -1]
+
+
+def dot_arrow(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product, Arrow-vectorized — bit-equal to
+    :func:`dot`; use on pair-grain relations where the interpreted fold is
+    the bottleneck (round 15, guide §4.2).
 
     ``aggregate``/``zip_with`` lambdas are CodegenFallback — INTERPRETED
     per element (~100 µs·core per 128-d pair, measured round 11) — which
     made the SemDeDup pair filter the single most expensive bench stage
     (3.4 s over 250 k candidate pairs at sf0.1). This pandas_udf computes
     the SAME sequential left fold at C speed: elementwise products are one
-    IEEE double multiply each (identical to the JVM's), and
-    ``np.add.accumulate`` is defined as the strictly sequential running
-    sum, so its last element is bit-identical to the fold's
-    ``((0+p0)+p1)+…`` — the cross-engine discipline the oracle's
-    ``list_sum`` fold relies on is preserved exactly. Verified: oracle
-    hash unchanged at sf0.001/0.01/0.1.
-    """
+    IEEE double multiply each (identical to the JVM's), summed by
+    :func:`fold_sum`. Verified: oracle hash unchanged at sf0.001/0.01/0.1.
+
+    The udf is built per call, not cached: its JVM function holds the
+    Python accumulator of the SparkContext it was first used in, and reused
+    after ``spark.stop()`` in a new session every task logged "Failed to
+    update accumulator" (tests/test_vectors.py)."""
+
     @F.pandas_udf("double")
     def dot_seq_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             # np.stack raises on an empty batch; an empty Series is the
             # correct (and only) answer for one.
             return pd.Series(np.empty(0, dtype=np.float64))
-        av = np.stack(a.to_numpy())
-        bv = np.stack(b.to_numpy())
-        prods = av * bv
-        # Leading 0.0 column reproduces the fold's 0.0 seed exactly (down
-        # to +0.0 vs -0.0 on all-negative-zero products).
-        seeded = np.concatenate(
-            [np.zeros((prods.shape[0], 1), dtype=np.float64), prods], axis=1
-        )
-        return pd.Series(
-            np.add.accumulate(seeded, axis=1, dtype=np.float64)[:, -1]
-        )
+        return pd.Series(fold_sum(np.stack(a.to_numpy()) * np.stack(b.to_numpy())))
 
-    return dot_seq_arrow
-
-
-# Built once on first use and cached: the udf object is stateless and
-# re-wrapping it per dot_arrow() call re-pickled the function for every query
-# build (ADVICE r15). Lazy rather than import-time because pandas_udf parses
-# its DDL return type through the active SparkContext.
-_DOT_SEQ_ARROW = None
-
-
-def dot_arrow(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product, Arrow-vectorized — bit-equal to
-    :func:`dot` (see :func:`_dot_seq_arrow_fn`); use on pair-grain
-    relations where the interpreted fold is the bottleneck."""
-    global _DOT_SEQ_ARROW
-    if _DOT_SEQ_ARROW is None:
-        _DOT_SEQ_ARROW = _dot_seq_arrow_fn()
-    return _DOT_SEQ_ARROW(a, b)
+    return dot_seq_arrow(a, b)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokenize
 from ..operators.similarity import brute_force_topk
 from ..sources.readers import load_table
+from .pinned_sql import centroid_argmax, sql_double
 from .registry import register
 
 # --------------------------------------------------------------------------- #
@@ -666,10 +667,8 @@ def _cluster_sizes_oracle() -> str:
     """Argmax-dot assignment against the pinned centroid matrix in DuckDB.
 
     Cosine argmax equals dot argmax (L2 normalization scales every dot by
-    the same positive factor), so the oracle skips the normalize step. The
-    chained CASE is first-max-wins, matching numpy argmax tie-breaking: if
-    case i fails, d_i < max(d_{i+1}..), so the first case whose d_i >= all
-    LATER dots is the global first maximum.
+    the same positive factor), so the oracle skips the normalize step; the
+    CASE is ``pinned_sql.centroid_argmax``'s first-max-wins chain.
 
     Numerical assumption: the two engines sum the dot in different orders
     (Spark BLAS over the normalized vector vs DuckDB list_dot_product over
@@ -679,28 +678,16 @@ def _cluster_sizes_oracle() -> str:
     a few hundred ulps of float64."""
     from ._pinned_centroids import _CLUSTER_CENTROIDS_K8 as cent
 
-    k = len(cent)
-    dots = ",\n         ".join(
-        "list_dot_product(CAST(embedding AS DOUBLE[]), ["
-        + ", ".join(repr(v) for v in row)
-        + f"]::DOUBLE[]) AS d{i}"
-        for i, row in enumerate(cent)
-    )
-    whens = "\n    ".join(
-        "WHEN "
-        + " AND ".join(f"d{i} >= d{j}" for j in range(i + 1, k))
-        + f" THEN {i}"
-        for i in range(k - 1)
+    am = centroid_argmax(
+        cent, lambda lits: f"list_dot_product(CAST(embedding AS DOUBLE[]), {lits})"
     )
     return f"""
 WITH dots AS (
-  SELECT {dots}
+  SELECT {am.dots}
   FROM embeddings
 ),
 assigned AS (
-  SELECT CASE
-    {whens}
-    ELSE {k - 1} END AS centroid
+  SELECT {am.case} AS centroid
   FROM dots
 )
 SELECT CAST(centroid AS BIGINT) AS centroid, COUNT(*) AS n_vectors
@@ -757,7 +744,8 @@ def _pca_projection_oracle() -> str:
 
     pcs = ",\n       ".join(
         " + ".join(
-            f"(CAST(embedding[{j + 1}] AS DOUBLE) - {_PCA_MEAN[j]!r}) * {w[j]!r}"
+            f"(CAST(embedding[{j + 1}] AS DOUBLE) - {sql_double(_PCA_MEAN[j])})"
+            f" * {sql_double(w[j])}"
             for j in range(len(_PCA_MEAN))
         )
         + f" AS pc{i + 1}"
@@ -822,17 +810,9 @@ def _sem_aff_cte() -> str:
     from ._pinned_centroids import _CLUSTER_CENTROIDS_K8 as cent
 
     k = len(cent)
-    dots = ",\n         ".join(
-        "list_sum(list_transform(list_zip(e, ["
-        + ", ".join(repr(v) for v in row)
-        + "]::DOUBLE[]), t -> t[1] * t[2])) AS d{i}".replace("{i}", str(i))
-        for i, row in enumerate(cent)
-    )
-    whens = "\n    ".join(
-        "WHEN "
-        + " AND ".join(f"d{i} >= d{j}" for j in range(i + 1, k))
-        + f" THEN {i}"
-        for i in range(k - 1)
+    am = centroid_argmax(
+        cent,
+        lambda lits: f"list_sum(list_transform(list_zip(e, {lits}), t -> t[1] * t[2]))",
     )
     aff_whens = "\n    ".join(
         f"WHEN centroid = {i} THEN d{i} / nrm" for i in range(k)
@@ -846,14 +826,12 @@ WITH v AS (
 d AS (
   SELECT vec_id, e,
          sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm,
-         {dots}
+         {am.dots}
   FROM v
 ),
 assigned AS (
   SELECT vec_id, e, nrm,
-         CASE
-    {whens}
-    ELSE {k - 1} END AS centroid,
+         {am.case} AS centroid,
          {dcols}
   FROM d
 ),
@@ -894,6 +872,7 @@ def _sem_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
+    from ..functions.vectors import fold_sum
     from ._pinned_centroids import _CLUSTER_CENTROIDS_K8 as cent
 
     k = len(cent)
@@ -908,19 +887,12 @@ def _sem_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)  # (n, d)
             n = e.shape[0]
             # Sequential-fold dot against each centroid and the self-norm:
-            # products are exact IEEE doubles; accumulate is the fold's
+            # products are exact IEEE doubles; fold_sum is the fold's
             # left-to-right order with the same 0.0 seed.
-            def seqdot(prods: np.ndarray) -> np.ndarray:
-                seeded = np.concatenate(
-                    [np.zeros((prods.shape[0], 1), dtype=np.float64), prods],
-                    axis=1,
-                )
-                return np.add.accumulate(seeded, axis=1, dtype=np.float64)[:, -1]
-
             d = np.empty((n, k), dtype=np.float64)
             for i in range(k):
-                d[:, i] = seqdot(e * cmat[i])
-            nrm = np.sqrt(seqdot(e * e))
+                d[:, i] = fold_sum(e * cmat[i])
+            nrm = np.sqrt(fold_sum(e * e))
             # First-max-wins argmax: centroid i iff d_i >= every LATER d_j
             # (ties to the earlier index), exactly the CASE pyramid's order.
             centroid = np.full(n, k - 1, dtype=np.int32)
@@ -972,7 +944,7 @@ removed AS (
   FROM ranked a
   JOIN ranked b ON a.centroid = b.centroid AND a.rk < b.rk
   WHERE list_sum(list_transform(list_zip(a.e, b.e), t -> t[1] * t[2]))
-        / (a.nrm * b.nrm) >= {tau!r}
+        / (a.nrm * b.nrm) >= {sql_double(tau)}
 )
 SELECT r.vec_id, CAST(r.centroid AS BIGINT) AS centroid, r.affinity,
        rm.vec_id IS NULL AS is_kept
@@ -1100,7 +1072,7 @@ cr AS (
 cremoved AS (
   SELECT DISTINCT b.vec_id
   FROM cr a JOIN cr b ON a.centroid = b.centroid AND a.rk < b.rk
-  WHERE {cos.format(a="a", b="b")} >= {tau!r}
+  WHERE {cos.format(a="a", b="b")} >= {sql_double(tau)}
 ),
 ckept AS (
   SELECT c.* FROM cr c
@@ -1117,12 +1089,12 @@ batch AS (
 dupc AS (
   SELECT DISTINCT b.vec_id
   FROM batch b JOIN ckept c ON c.centroid = b.centroid
-  WHERE {cos.format(a="c", b="b")} >= {tau!r}
+  WHERE {cos.format(a="c", b="b")} >= {sql_double(tau)}
 ),
 dupb AS (
   SELECT DISTINCT b.vec_id
   FROM batch a JOIN batch b ON a.centroid = b.centroid AND a.rk < b.rk
-  WHERE {cos.format(a="a", b="b")} >= {tau!r}
+  WHERE {cos.format(a="a", b="b")} >= {sql_double(tau)}
 )
 SELECT b.vec_id, CAST(b.centroid AS BIGINT) AS centroid,
        CASE WHEN dc.vec_id IS NOT NULL THEN 'dup_of_corpus'

@@ -46,6 +46,7 @@ from ..operators.similarity import (
     ivf_topk,
 )
 from ..sources.readers import load_table
+from .pinned_sql import centroid_argmax, sql_double
 from .registry import register
 
 # --------------------------------------------------------------------------- #
@@ -451,20 +452,7 @@ def _ivf_topk_oracle(n_probe: int = 6, k_top: int = 5) -> str:
     Hash-green means the PRUNING is bit-identical, not just the final rank."""
     from ._pinned_centroids import _CLUSTER_CENTROIDS_K8 as cent
 
-    k = len(cent)
-    dots = ",\n         ".join(
-        "list_dot_product(e, ["
-        + ", ".join(repr(v) for v in row)
-        + f"]::DOUBLE[]) AS d{i}"
-        for i, row in enumerate(cent)
-    )
-    whens = "\n    ".join(
-        "WHEN "
-        + " AND ".join(f"d{i} >= d{j}" for j in range(i + 1, k))
-        + f" THEN {i}"
-        for i in range(k - 1)
-    )
-    structs = ", ".join("{'idx': %d, 'd': d%d}" % (i, i) for i in range(k))
+    am = centroid_argmax(cent, lambda lits: f"list_dot_product(e, {lits})")
     return f"""
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings
@@ -472,17 +460,15 @@ WITH v AS (
 nv AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
 d AS (
   SELECT vec_id, e, nrm,
-         {dots}
+         {am.dots}
   FROM nv
 ),
 assigned AS (
-  SELECT vec_id, e, nrm, CASE
-    {whens}
-    ELSE {k - 1} END AS centroid
+  SELECT vec_id, e, nrm, {am.case} AS centroid
   FROM d
 ),
 qd AS (
-  SELECT vec_id AS qid, e AS qe, nrm AS qnrm, unnest([{structs}]) AS u
+  SELECT vec_id AS qid, e AS qe, nrm AS qnrm, unnest([{am.structs}]) AS u
   FROM d WHERE vec_id < 8
 ),
 probes AS (
@@ -648,9 +634,10 @@ def _logreg_oracle() -> str:
     """Replay of the pinned-logreg logit: the SAME left-associated IEEE
     sequence z = ((((b + t0) + t1) + t2) + t3), tᵢ = ((xᵢ − μᵢ)/σᵢ)·wᵢ,
     over the already-certified exact-integer token-stat idioms. Every
-    pinned literal is CAST to DOUBLE — a bare 54.33 is DECIMAL in DuckDB
-    and decimal subtraction/division would not be IEEE arithmetic (the
-    corpus_mix_summary lesson)."""
+    pinned literal is written by ``sql_double``, which DuckDB parses as a
+    DOUBLE equal to the pinned value. A bare 54.33 would be DECIMAL, and
+    ``CAST(<decimal> AS DOUBLE)`` rounds twice: 2 of the 13 pinned values
+    land one ulp off that way (see plans/pinned_sql.py)."""
     from ._pinned_logreg import (
         _LOGREG_BIAS,
         _LOGREG_MEAN,
@@ -659,11 +646,11 @@ def _logreg_oracle() -> str:
     )
 
     cols = ["n_tokens", "n_unique_tokens", "n_token_chars", "n_chars"]
-    z = f"CAST({_LOGREG_BIAS!r} AS DOUBLE)"
+    z = sql_double(_LOGREG_BIAS)
     for c, m, s, w in zip(cols, _LOGREG_MEAN, _LOGREG_STD, _LOGREG_WEIGHTS):
         z = (
-            f"({z} + (({c} - CAST({m!r} AS DOUBLE)) / CAST({s!r} AS DOUBLE))"
-            f" * CAST({w!r} AS DOUBLE))"
+            f"({z} + (({c} - {sql_double(m)}) / {sql_double(s)})"
+            f" * {sql_double(w)})"
         )
     return f"""
 WITH t AS (
@@ -2532,20 +2519,7 @@ def _ivfpq_topk_oracle(n_probe: int = 6, shortlist: int = 32, k_top: int = 5) ->
     from ._pinned_centroids import _CLUSTER_CENTROIDS_K8 as cent
     from ._pinned_pq import _PQ_CODEBOOKS_M8_K16 as books
 
-    kc = len(cent)
-    dots = ",\n         ".join(
-        "list_dot_product(e2, ["
-        + ", ".join(repr(v) for v in row)
-        + f"]::DOUBLE[]) AS d{i}"
-        for i, row in enumerate(cent)
-    )
-    whens = "\n    ".join(
-        "WHEN "
-        + " AND ".join(f"d{i} >= d{j}" for j in range(i + 1, kc))
-        + f" THEN {i}"
-        for i in range(kc - 1)
-    )
-    structs = ", ".join("{'idx': %d, 'd': d%d}" % (i, i) for i in range(kc))
+    am = centroid_argmax(cent, lambda lits: f"list_dot_product(e2, {lits})")
     dsub = len(books[0][0])
     vals = ",\n    ".join(
         f"({m}, {kk}, [" + ", ".join(str(v) for v in books[m][kk]) + "]::BIGINT[])"
@@ -2566,20 +2540,18 @@ nv AS (
 ),
 ivfd AS (
   SELECT vec_id, e2, nrm,
-         {dots}
+         {am.dots}
   FROM nv
 ),
 assigned AS (
-  SELECT vec_id, CASE
-    {whens}
-    ELSE {kc - 1} END AS centroid
+  SELECT vec_id, {am.case} AS centroid
   FROM ivfd
 ),
 probes AS (
   SELECT qid, idx AS centroid FROM (
     SELECT vec_id AS qid, u.idx AS idx,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY u.d DESC, u.idx) AS r
-    FROM (SELECT vec_id, unnest([{structs}]) AS u FROM ivfd WHERE vec_id < 8)
+    FROM (SELECT vec_id, unnest([{am.structs}]) AS u FROM ivfd WHERE vec_id < 8)
   ) WHERE r <= {n_probe}
 ),
 sub AS (

@@ -4,9 +4,10 @@ The reference (``/root/reference/``) has no session concept — it is eager pand
 one process. Here every plan is lazy Catalyst; the configs below are the knobs that
 matter when the same plans run on a 1000-executor cluster against ~100 TB:
 
-* AQE on — runtime shuffle-partition coalescing, skew-join splitting, and
-  dynamic join-strategy demotion are the difference between a tuned and an
-  untuned plan at scale.
+* AQE (Spark's default, so not set here) is relied on — runtime
+  shuffle-partition coalescing, skew-join splitting, and dynamic
+  join-strategy demotion are the difference between a tuned and an untuned
+  plan at scale.
 * ``spark.sql.shuffle.partitions`` — sized for local[32] testing; on a real
   cluster AQE coalesces from a deliberately high initial number instead.
 * Arrow enabled — every pandas_udf / toPandas boundary is Arrow-batched.
@@ -40,11 +41,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # -- Adaptive execution: coalesce shuffle partitions, split skewed
-        #    partitions, demote to broadcast joins at runtime.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # -- Joins: let the planner pick a shuffled-hash join when its size
         #    conditions hold (one side small per partition) instead of
@@ -52,7 +48,7 @@ def get_spark(
         #    tune: the planner stays size-gated, AQE skew-split still
         #    applies, and SMJ remains for big⋈big joins that fail the hash
         #    conditions. No committed A/B backs this default yet
-        #    (OPTIMIZATION_r16.md was never filled in); ROADMAP direction 5
+        #    (OPTIMIZATION_r16.md was never filled in); ROADMAP direction 6
         #    keeps or deletes it on one. The env knob exists so that A/B
         #    runs without editing this file.
         .config(
@@ -68,10 +64,6 @@ def get_spark(
         #    lake_cycles pass CPU lower in 22 of 26 pairs (medians -26% and
         #    -16% on two sets of unseen seeds); queries flat (14 pairs).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # -- IO: vectorized parquet reader is on by default; keep split sizes
-        #    large enough that small SF test files do not over-partition.
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # -- Python boundary: always Arrow.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- ANSI off: we want try_/coerce-to-null semantics matching the

@@ -49,8 +49,8 @@ STRIDE = 1 << 40
 
 def replicate(spark, src: str, dst: str, factor: int) -> None:
     """Replicate ``src``'s fact tables ``factor``× into ``dst`` (see module
-    docstring for the key-shift semantics). Shared by the 10× and 100×
-    probes (tools/make_scale100.py)."""
+    docstring for the key-shift semantics). The 100× probe that also
+    used it, tools/make_scale100.py, is in git history at ec940a3."""
     os.makedirs(dst, exist_ok=True)
 
     for t in DIMS:
